@@ -11,11 +11,18 @@ Workloads (see BENCHMARK.json and perfbench/layers.json):
 
 A run builds graft and the harness once per source tree (sbt, offline),
 writes its inputs from the seed, runs one fresh JVM (set-up, a cold
-pass, warm passes for --seconds), checks the outputs against DuckDB,
-and prints the metrics. The last stdout line is the result JSON; with
---trace 0 it carries the end-to-end metrics, with --trace 1 the
-per-layer ones. Everything it writes stays under .bench_build/.
+pass, a fixed number of warm passes), checks the outputs against
+DuckDB, and prints the metrics. The last stdout line is the result
+JSON; with --trace 0 it carries the end-to-end metrics, with --trace 1
+the per-layer ones. Everything it writes stays under .bench_build/.
+
+The warm pass count and the later passes counted for pass_s are fixed
+per workload in perfbench/layers.json, sized so the warm passes last
+about BENCHMARK.json's run_seconds on four cores. --seconds is recorded
+but does not change the count: a time budget would measure a faster
+program at later, more JIT-compiled passes than a slower one.
 """
+import fnmatch
 import argparse
 import contextlib
 import hashlib
@@ -238,16 +245,18 @@ def metric_units() -> dict:
     return {m["name"]: m["unit"] for m in SPEC["end_to_end"] + SPEC["per_layer"]}
 
 
-def steady(passes: list) -> list:
-    """The later half of the warm passes: the JIT is still compiling hot
-    paths during the first ones, so their times drift down."""
-    return passes[len(passes) // 2:]
+def steady(passes: list, workload: str) -> list:
+    """The warm passes counted for pass_s: the workload's fixed number of
+    later ones. The JIT is still compiling hot paths during the first
+    warm passes, so their times drift down."""
+    return passes[-LAYERS["workloads"][workload]["counted_passes"]:]
 
 
-def end_to_end(res: dict, setups: list, input_rows: int) -> dict:
-    pass_s = statistics.median(steady(res["pass_s"]))
+def end_to_end(res: dict, workload: str, input_rows: int) -> dict:
+    pass_s = statistics.median(steady(res["pass_s"], workload))
     return {
-        "setup_s": statistics.median(setups),
+        "start_s": res["start_s"],
+        "setup_s": statistics.median(res["setup_s"]),
         "cold_pass_s": res["cold_pass_s"],
         "pass_s": pass_s,
         "rows_per_s": input_rows / pass_s,
@@ -264,15 +273,25 @@ def canary_stamp(res: dict) -> dict:
             or foreign > c["foreign_share_max"]}
 
 
-def record_overhead(trace_path: Path, res: dict, workload: str, seed: int) -> None:
-    """Tracing overhead: traced pass_s against the latest untraced run of
-    the same workload in this checkout (same seed when there is one)."""
+def deterministic(per_layer: dict) -> dict:
+    """The per-layer counters that repeat exactly for one seed and one
+    program (layers.json's deterministic_counters): a move in any of
+    them is a plan-shape change whatever the wall clock says."""
+    pats = LAYERS["deterministic_counters"]
+    return {k: v for k, v in per_layer.items() if any(fnmatch.fnmatchcase(k, p) for p in pats)}
+
+
+def finish_trace(trace_path: Path, res: dict, workload: str, seed: int) -> None:
+    """Adds the deterministic counters and the tracing overhead: traced
+    pass_s against the latest untraced run of the same workload in this
+    checkout (same seed when there is one)."""
     untraced = []
     for p in (WORK / "runs").glob(f"{workload}-*-t0.json"):
         r = json.loads(p.read_text())
         untraced.append((r.get("seed") == seed, p.stat().st_mtime, r["metrics"]["pass_s"]["value"]))
     trace = json.loads(trace_path.read_text())
-    traced = statistics.median(steady(res["pass_s"]))
+    trace["deterministic"] = deterministic(res["per_layer"])
+    traced = statistics.median(steady(res["pass_s"], workload))
     trace["overhead"] = {"traced_pass_s": traced}
     if untraced:
         base = max(untraced)[2]
@@ -305,8 +324,11 @@ def main(argv=None) -> int:
         input_rows = make_inputs(a.workload, a.seed, input_dir)
         out.mkdir(parents=True)
         log(f"inputs written at {time.time() - t_start:.1f}s")
+        spec = LAYERS["workloads"][a.workload]
         harness(cp, ["--workload", a.workload, "--input", str(input_dir), "--out", str(out),
-                     "--seconds", str(a.seconds), "--trace", str(a.trace), "--run-id", run_id],
+                     "--warm-passes", str(spec["warm_passes"]),
+                     "--counted", str(spec["counted_passes"]),
+                     "--trace", str(a.trace), "--run-id", run_id],
                 deadline)
         res = json.loads((out / "result.json").read_text())
         log(f"harness done at {time.time() - t_start:.1f}s")
@@ -315,8 +337,7 @@ def main(argv=None) -> int:
         for q, e in res["errors"].items():
             log(f"error in {q}: {e}")
 
-        setups = res["setup_s"]
-        e2e = end_to_end(res, setups, input_rows)
+        e2e = end_to_end(res, a.workload, input_rows)
         stamp = canary_stamp(res)
         units = metric_units()
         if a.trace:
@@ -325,19 +346,20 @@ def main(argv=None) -> int:
             trace_path = WORK / "runs" / f"{run_id}.trace.json"
             trace_path.parent.mkdir(parents=True, exist_ok=True)
             shutil.copy(out / "trace.json", trace_path)
-            record_overhead(trace_path, res, a.workload, a.seed)
+            finish_trace(trace_path, res, a.workload, a.seed)
             log(f"trace written to {trace_path.relative_to(ROOT)}")
         else:
             values = e2e
         metrics = {n: {"value": v, "unit": units[n]} for n, v in values.items()}
         result = {"correct": not failed, "attempted": res["attempted"], "failed": len(failed),
                   "metrics": metrics}
-        record = dict(result, workload=a.workload, seed=a.seed, run_id=run_id,
-                      input_rows=input_rows, setup_samples_s=setups, pass_samples_s=res["pass_s"],
+        record = dict(result, workload=a.workload, seed=a.seed, seconds=a.seconds, run_id=run_id,
+                      input_rows=input_rows, setup_samples_s=res["setup_s"],
+                      pass_samples_s=res["pass_s"],
                       failed_calls=sorted(failed), errors=res["errors"], call_s=res["call_s"],
                       **stamp)
         if a.trace:
-            record.update(self_time_s=res["self_time_s"], deterministic=res["deterministic"])
+            record.update(self_time_s=res["self_time_s"], deterministic=deterministic(res["per_layer"]))
         (WORK / "runs").mkdir(parents=True, exist_ok=True)
         (WORK / "runs" / f"{run_id}.json").write_text(json.dumps(record, indent=1))
         # one run record per workload/seed/trace, newest wins
@@ -346,14 +368,13 @@ def main(argv=None) -> int:
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    q = steady(res["pass_s"])
+    q = steady(res["pass_s"], a.workload)
     print(f"workload {a.workload}  seed {a.seed}  input rows {input_rows}  warm passes "
           f"{len(res['pass_s'])} ({len(q)} counted)  wall {time.time() - t_start:.1f}s")
     for n, m in metrics.items():
         print(f"  {n:28s} {m['value']:.6g} {m['unit']}")
-    if not a.trace and len(q) > 1:
-        qs = statistics.quantiles(q, n=4) if len(q) > 2 else sorted(q)
-        print(f"  pass_s quartiles {qs[0]:.4f} .. {qs[-1]:.4f} over {len(q)} passes")
+    qs = statistics.quantiles(q, n=4, method="inclusive")
+    print(f"  pass_s quartiles {qs[0]:.4f} .. {qs[2]:.4f} over {len(q)} counted passes")
     print(f"  failed_ops {len(failed)}/{res['attempted']} calls"
           + (f" ({', '.join(sorted(failed))})" if failed else ""))
     print(f"  machine_factor {stamp['machine_factor']:.3f}  foreign_cpu_share "

@@ -7,6 +7,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 import graft.ProcCpu
@@ -14,18 +16,22 @@ import graft.ProcCpu
 /** One benchmark run of one workload in a fresh JVM:
   *
   *   set up (session + inputs registered) → canary → cold pass →
-  *   warm passes for `--seconds` → canary → gate outputs.
+  *   a fixed number of warm passes → full GC → canary → gate outputs.
   *
-  * `perfbench/run.py` prepares the inputs, launches this main, checks
-  * the outputs and prints the metrics. With `--trace 1` it records
-  * spans and listener counters (see [[Tracer]]); without, no listener
-  * is registered.
+  * The warm pass count is fixed per workload (perfbench/layers.json),
+  * not a time budget, so a faster or slower program is measured at the
+  * same pass indices. `perfbench/run.py` prepares the inputs, launches
+  * this main, checks the outputs and prints the metrics. With
+  * `--trace 1` it records spans and listener counters (see [[Tracer]]);
+  * without, no listener is registered.
   *
-  * Usage: Harness --workload W --input DIR --out DIR --seconds S
-  *          --trace 0|1 --run-id ID --launch-us EPOCH_MICROS
+  * Usage: Harness --workload W --input DIR --out DIR --warm-passes N
+  *          --counted M --trace 0|1 --run-id ID --launch-us EPOCH_MICROS
   */
 object Harness {
-  private val SetupSamples = 5
+  /** Set-ups timed inside the JVM, after the one from process launch. */
+  private val SetupSamples = 3
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   private def nowUs(): Long = {
     val i = java.time.Instant.now()
@@ -79,13 +85,28 @@ object Harness {
     times(2)
   }
 
-  /** Old-generation occupancy after a full collection, in MB. */
+  /** Old-generation occupancy after full collections, in MB. Called
+    * once, after the last warm pass, so no timed pass starts on a heap
+    * the benchmark collected for it. Spark's ContextCleaner frees
+    * shuffles and broadcasts only after a collection finds them
+    * unreachable, so collections repeat until the occupancy settles.
+    */
   private def oldGenAfterGcMb(): Double = {
-    System.gc()
     val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(p => p.getName.contains("Old Gen") || p.getName.contains("Tenured"))
-    pools.map(p => Option(p.getCollectionUsage).map(_.getUsed).getOrElse(p.getUsage.getUsed))
-      .sum / (1024.0 * 1024.0)
+    def collect(): Double = {
+      System.gc()
+      pools.map(p => Option(p.getCollectionUsage).map(_.getUsed).getOrElse(p.getUsage.getUsed))
+        .sum / (1024.0 * 1024.0)
+    }
+    var prev = Double.MaxValue
+    var cur = collect()
+    var rounds = 1
+    while (rounds < 8 && prev - cur > 0.5) {
+      Thread.sleep(200)
+      prev = cur; cur = collect(); rounds += 1
+    }
+    cur
   }
 
   private def median(xs: Seq[Double]): Double = {
@@ -101,11 +122,13 @@ object Harness {
     val out = opt("out")
     val traced = opt.get("trace").contains("1")
     val launchUs = opt("launch-us").toLong
+    val warmPasses = opt("warm-passes").toInt
+    val counted = opt("counted").toInt
     val cores = Runtime.getRuntime.availableProcessors()
 
     // set-up: a session with the inputs registered. The first is timed
-    // from process launch; the session is then stopped and set up again,
-    // and the median of all set-ups is reported.
+    // from process launch (start_s); the session is then stopped and set
+    // up again SetupSamples times in this JVM (setup_s is their median).
     def setUp(): (SparkSession, Workload) = {
       val spark = session(cores, out)
       val workload = Workloads(workloadName, spark, input, out)
@@ -113,7 +136,8 @@ object Harness {
       (spark, workload)
     }
     var (spark, workload) = setUp()
-    val setups = mutable.ArrayBuffer((nowUs() - launchUs) / 1e6)
+    val startS = (nowUs() - launchUs) / 1e6
+    val setups = mutable.ArrayBuffer[Double]()
     while (setups.length < SetupSamples) {
       spark.stop()
       val t0 = System.nanoTime()
@@ -147,7 +171,9 @@ object Harness {
           val c0 = System.nanoTime()
           try tracer.span("call", call.name) {
             val built = tracer.span("build", call.name)(call.build())
-            if (traced) tracer.span("plan", call.name)(built.plan())
+            if (traced) built.planned.foreach { ds =>
+              tracer.span("plan", call.name)(ds.queryExecution.executedPlan)
+            }
             tracer.span("exec", call.name)(built.exec())
           } catch {
             case NonFatal(e) =>
@@ -166,20 +192,14 @@ object Harness {
     }
 
     val warm = mutable.ArrayBuffer[Double]()
-    val heapMb = mutable.ArrayBuffer[Double]()
     var coldS = 0.0
     tracer.span("run", "run") {
       tracer.span("workload", workloadName) {
         coldS = pass(0)
-        oldGenAfterGcMb()
-        val budgetNs = opt.getOrElse("seconds", "10").toLong * 1000000000L
-        val w0 = System.nanoTime()
-        while (warm.isEmpty || System.nanoTime() - w0 < budgetNs) {
-          warm += pass(warm.length + 1)
-          heapMb += oldGenAfterGcMb()
-        }
+        while (warm.length < warmPasses) warm += pass(warm.length + 1)
       }
     }
+    val heapMb = oldGenAfterGcMb()
 
     val canaryAfter = canary()
     val wallS = (System.nanoTime() - wall0) / 1e9
@@ -198,18 +218,17 @@ object Harness {
     val result = mutable.LinkedHashMap[String, Any](
       "workload" -> workloadName, "cores" -> cores, "traced" -> traced,
       "setup_s" -> setups.toSeq, "cold_pass_s" -> coldS, "pass_s" -> warm.toSeq,
-      "heap_after_gc_mb" -> heapMb.max,
+      "start_s" -> startS, "heap_after_gc_mb" -> heapMb,
       "attempted" -> attempted, "failed_calls" -> failedCalls.toSeq, "errors" -> errors,
       "calls" -> workload.calls.map(_.name), "call_s" -> callSeconds.toSeq,
       "canary_s" -> Seq(canaryBefore, canaryAfter), "foreign_cpu_share" -> foreignShare,
       "gate" -> gate)
     if (traced) {
       val summary = Summary(opt("run-id"), tracer.spans.toSeq, counters.get, cores,
-        workload.calls.map(_.name))
+        workload.calls.map(_.name), counted)
       result("per_layer") = summary.perLayer
-      result("deterministic") = summary.deterministic
       result("self_time_s") = summary.selfTime
-      Files.writeString(Paths.get(out, "trace.json"), Json.write(summary.traceFile))
+      Files.writeString(Paths.get(out, "trace.json"), json.writeValueAsString(summary.traceFile))
     }
 
     // stop streams and the state-store maintenance thread before the
@@ -218,19 +237,19 @@ object Harness {
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     catch { case NonFatal(_) => () }
     spark.stop()
-    Files.writeString(Paths.get(out, "result.json"), Json.write(result))
+    Files.writeString(Paths.get(out, "result.json"), json.writeValueAsString(result))
     // Spark leaves non-daemon threads that can hold the JVM for seconds
     sys.exit(0)
   }
 
   /** Per-layer numbers from a traced run's spans. Each metric is the
-    * median of its per-pass value over the later half of the warm passes
+    * median of its per-pass value over the last `counted` warm passes
     * (the passes run.py counts for pass_s).
     */
   final case class Summary(runId: String, spans: Seq[Span], counters: Counters, cores: Int,
-      calls: Seq[String]) {
+      calls: Seq[String], counted: Int) {
     private val passes = spans.filter(_.layer == "pass").sortBy(_.startNs)
-    private val warm = { val w = passes.drop(1); w.drop(w.length / 2) }
+    private val warm = passes.drop(1).takeRight(counted)
     private def within(p: Span)(s: Span): Boolean =
       s.startNs >= p.startNs && s.endNs <= p.endNs
     private def layerSeconds(p: Span, layer: String): Double =
@@ -293,15 +312,6 @@ object Harness {
         Map("memo.cold_extra_jobs" -> (coldJobs.getOrElse(0.0) - warmMedian("sched.jobs")))
     }
 
-    /** Counters that must repeat exactly for one seed: a move in any of
-      * them is a plan-shape change whatever the wall clock says.
-      */
-    val deterministic: Map[String, Double] =
-      perLayer.filter { case (k, _) =>
-        Seq("sched.jobs", "sched.stages", "sched.tasks", "shuffle.write_bytes",
-          "stream.state_rows").contains(k) || (k.startsWith("q.") && k.endsWith(".jobs"))
-      }
-
     /** Span duration minus the part its direct children cover, summed
       * per layer over the whole run.
       */
@@ -322,7 +332,6 @@ object Harness {
           "counters_start" -> s.c0.values, "counters_end" -> s.c1.values)),
         "self_time_s" -> selfTime,
         "per_layer" -> perLayer,
-        "deterministic" -> deterministic,
         "passes" -> passes.zipWithIndex.map { case (p, i) =>
           Map("name" -> p.name, "kind" -> (if (i == 0) "cold" else "warm"),
             "pass_s" -> p.seconds)

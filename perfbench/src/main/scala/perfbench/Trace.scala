@@ -69,7 +69,7 @@ final class Counters(sc: SparkContext) extends SparkListener {
 
   /** A consistent snapshot after the listener bus has drained. */
   def snapshot(): Snap = {
-    org.apache.spark.PerfbenchBus.drain(sc)
+    org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc, 60000L)
     synchronized {
       Snap(Map(
         "sched.jobs" -> jobs, "sched.stages" -> stages, "sched.tasks" -> tasks,

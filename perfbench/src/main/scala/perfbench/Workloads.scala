@@ -1,6 +1,6 @@
 package perfbench
 
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -9,19 +9,21 @@ import scala.jdk.CollectionConverters._
 import graft.{Pipeline, SparkEntry, Transformer, TypedPipeline, TypedTransformer}
 import graft.sources.Sources
 
-/** The result of a call's build step: the plan can be forced on its
-  * own (traced run only), then the sink runs it.
+/** The result of a call's build step. `planned` is the Dataset whose
+  * query execution the sink runs, when the sink reuses it: the traced
+  * run forces its physical plan on its own. Sinks that plan a new
+  * Dataset (`consume()`'s write command, `first(n)`'s limit) leave it
+  * empty, and their planning stays inside the exec step.
   */
-trait Built {
-  def plan(): Unit
-  def exec(): Unit
-}
+final case class Built(exec: () => Unit, planned: Option[Dataset[_]] = None)
 
 /** One pipeline call of a pass. */
 final case class Call(name: String, build: () => Built)
 
 trait Workload {
-  /** Reads every input table once, as a user's job would at start-up. */
+  /** Opens every input through graft's sources and resolves its schema,
+    * as a user's job does at start-up.
+    */
   def register(): Unit
   def calls: Seq[Call]
   /** Untimed, after the passes: leaves what the correctness gate checks. */
@@ -49,18 +51,18 @@ object Workloads {
     */
   final class Queries(spark: SparkSession, dir: String, out: String,
       names: Seq[String], tables: Seq[String]) extends Workload {
-    def register(): Unit =
-      tables.foreach(t => spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t))
+    def register(): Unit = {
+      tables.foreach(t => Sources.parquet(spark, s"$dir/$t.parquet").toDF.schema)
+      // the registry the calls look their queries up in
+      require(names.forall(SparkEntry.queries.contains), "query missing from the registry")
+    }
 
     private val last = collection.mutable.Map[String, (StructType, Seq[Row])]()
 
     val calls: Seq[Call] = names.map { q =>
       Call(q, () => {
         val df = SparkEntry.queries(q)(spark, dir)
-        new Built {
-          def plan(): Unit = { df.queryExecution.executedPlan; () }
-          def exec(): Unit = last(q) = (df.schema, Pipeline(df).toList()._1)
-        }
+        Built(() => last(q) = (df.schema, Pipeline(df).toList()._1), Some(df))
       })
     }
 
@@ -81,7 +83,7 @@ object Workloads {
   final class LaygoChain(spark: SparkSession, dir: String) extends Workload {
     private val path = s"$dir/laygo"
     private def source(): Pipeline = Sources.parquet(spark, path)
-    def register(): Unit = source().toDF.createOrReplaceTempView("laygo")
+    def register(): Unit = source().toDF.schema
 
     // performance_test.py: filter even -> x2 -> keep > 100 -> +1
     private val chain: Transformer = Transformer.identity
@@ -107,35 +109,23 @@ object Workloads {
     val calls: Seq[Call] = Seq(
       Call("chain_transformer", () => {
         val p = source().apply(chain)
-        new Built {
-          def plan(): Unit = { p.toDF.queryExecution.executedPlan; () }
-          def exec(): Unit = { p.consume(); () }
-        }
+        Built(() => p.consume())
       }),
       Call("chain_typed", () => {
         val p = typedSource().transform(typedChain)
-        new Built {
-          def plan(): Unit = { p.ds.queryExecution.executedPlan; () }
-          def exec(): Unit = p.consume()
-        }
+        Built(() => p.consume())
       }),
       Call("tap_catch_reduce", () => {
         val obs = Observation("laygo_tap")
         val p = source().apply(tapCatchReduce(obs))
-        new Built {
-          def plan(): Unit = { p.toDF.queryExecution.executedPlan; () }
-          def exec(): Unit = {
-            perKey = p.toList()._1
-            tapRows = obs.get("rows").asInstanceOf[Long]
-          }
-        }
+        Built(() => {
+          perKey = p.toList()._1
+          tapRows = obs.get("rows").asInstanceOf[Long]
+        }, Some(p.toDF))
       }),
       Call("first_n", () => {
         val p = source().apply(chain)
-        new Built {
-          def plan(): Unit = { p.toDF.queryExecution.executedPlan; () }
-          def exec(): Unit = firstRows = p.first(100)._1
-        }
+        Built(() => firstRows = p.first(100)._1)
       }))
 
     /** The last pass's outputs, plus count and sum of both consume()

@@ -4,7 +4,7 @@
     python3 perfbench/test_perfbench.py
 
 The first group runs without a JVM. The last two run the benchmark
-itself (about six minutes on four cores): every workload once untraced,
+itself (about seven minutes on four cores): every workload once untraced,
 then twice traced with one seed.
 """
 import json
@@ -12,6 +12,7 @@ import subprocess
 import sys
 import tempfile
 import unittest
+from unittest import mock
 from pathlib import Path
 
 import pyarrow as pa
@@ -43,8 +44,19 @@ def latest_trace(workload: str, seed: int) -> Path:
 class Offline(unittest.TestCase):
     def test_spec_lists_metrics_and_workloads_the_runner_knows(self):
         self.assertEqual(sorted(WORKLOADS), sorted(run.LAYERS["workloads"]))
-        fake = {"pass_s": [2.0, 3.0, 4.0], "cold_pass_s": 9.0, "heap_after_gc_mb": 80.0}
-        self.assertEqual(set(run.end_to_end(fake, [1.0, 2.0, 3.0], 100)), set(E2E))
+        fake = {"pass_s": [9.0, 9.0, 1.0, 2.0, 4.0, 6.0], "cold_pass_s": 9.0,
+                "heap_after_gc_mb": 80.0, "start_s": 11.0, "setup_s": [1.0, 2.0, 3.0]}
+        for w in WORKLOADS:
+            self.assertEqual(set(run.end_to_end(fake, w, 100)), set(E2E), w)
+        # pass_s is the median of the workload's fixed count of later passes
+        with mock.patch.dict(run.LAYERS["workloads"]["laygo_chain"], counted_passes=3):
+            self.assertEqual(run.end_to_end(fake, "laygo_chain", 100)["pass_s"], 4.0)
+
+    def test_deterministic_counters_come_from_layers_json(self):
+        per_layer = {"sched.jobs": 5.0, "sched.driver_gap_s": 0.3, "q.span_corrupt.jobs": 1.0,
+                     "q.span_corrupt.s": 0.2, "shuffle.write_bytes": 10.0}
+        self.assertEqual(set(run.deterministic(per_layer)),
+                         {"sched.jobs", "q.span_corrupt.jobs", "shuffle.write_bytes"})
 
     def test_wrong_laygo_expectation_is_a_failed_op(self):
         with tempfile.TemporaryDirectory() as d:

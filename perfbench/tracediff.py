@@ -4,11 +4,11 @@
     python3 perfbench/tracediff.py OLD.trace.json NEW.trace.json
 
 Trace files are written by `perfbench/run.py --trace 1` under
-.bench_build/runs/. The counters compared (sched.jobs, sched.stages,
-sched.tasks, q.<query>.jobs, shuffle.write_bytes, stream.state_rows)
-repeat exactly for one seed and one program, so any move is reported
-as a plan-shape change, whatever the wall clock says. Exits 1 when a
-counter moved, 0 otherwise.
+.bench_build/runs/. The counters compared are the trace's
+`deterministic` ones (perfbench/layers.json, deterministic_counters):
+they repeat exactly for one seed and one program, so any move is
+reported as a plan-shape change, whatever the wall clock says. Exits 1
+when a counter moved, 0 otherwise.
 """
 import json
 import sys
