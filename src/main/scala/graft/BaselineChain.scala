@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Reference-parity throughput measurement: the EXACT pipeline shape
@@ -22,13 +21,8 @@ object BaselineChain {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val reps = 10
-    Seq(1, Runtime.getRuntime.availableProcessors()).foreach { cores =>
-      val spark = SparkSession.builder()
-        .master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+    Seq(1, GraftSession.cpus).foreach { cores =>
+      val spark = GraftSession.local(cores)
       def run(): Long = {
         val out = spark.range(n)
           .filter(col("id") % 2 === 0)

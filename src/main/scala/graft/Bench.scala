@@ -1,37 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores (the driver contract is local[32])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // cap AQE coalescing at 16 MB wire-bytes per reducer: agg hash
-      // entries cost ~3-5x their wire bytes on-heap, so the 64 MB
-      // default re-collapsed basket_pairs' 36 M-group aggregation at
-      // sf3 to 8 partitions of ~4.5 M groups each — the GC tail the
-      // r13 chain measured; at 16 MB the same shuffle keeps 26-32
-      // reducers. (A wider initialPartitionNum was tried and reverted:
-      // it taxed every small-scale query with extra tasks while the
-      // advisory cap alone delivers the partition count.)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // explicit AQE skew-join handling, same contract as Verify
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // RocksDB + changelog checkpointing for streaming replays — the
-      // Verify session's contract (see Verify.scala for the rationale)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // warm JIT/classloading/codegen so the first measured query isn't
     // charged one-time setup. Measured (RunOne, sf0.1): a cold
     // dedup_clusters run costs 10.8s vs 1.9s steady-state — and a
@@ -69,9 +40,7 @@ object Bench {
     // was a load-contaminated rerun that read as a phantom regression.
     // shared with RunOne (graft.ProcCpu) so adjudication reps and the
     // graded bench can never disagree on the accounting
-    def totalBusyJiffies(): Long = ProcCpu.totalBusyJiffies()
-    def selfJiffies(): Long = ProcCpu.selfJiffies()
-    val busy0 = totalBusyJiffies(); val self0 = selfJiffies()
+    val run0 = ProcCpu.snapshot()
     val wall0 = System.nanoTime()
     // a throwing query must NOT be recorded as a (tiny) time — the r7
     // driver run hit exactly that: seven analysis-failed queries showed
@@ -113,14 +82,7 @@ object Bench {
     // window foreignByQuery accumulates over): the denominator for the
     // per-query contamination gate below
     val wallByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // dev loop: SPARK_GRAFT_BENCH_ONLY=a,b restricts the sweep for
-    // A/B timing of one query family (driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    val selected = GraftSession.selected(SparkEntry.queries)
     // chain hygiene (r14): in the shared-JVM sweep a heavy query's
     // garbage is collected DURING the next query and reads as that
     // query's regression — most r13 sf3 flags dissolved in isolation
@@ -132,33 +94,11 @@ object Bench {
     def settleHeap(): Unit = if (gcSettle) {
       System.gc(); Thread.sleep(300); System.gc(); Thread.sleep(200)
     }
-    // memo-trainer honesty: the train-once artifacts (BPE merge table,
-    // bisecting tree) survive the inter-pass cache hygiene BY DESIGN —
-    // derived queries are supposed to measure reuse. But each family's
-    // designated TRAINER query must measure a real training run in
-    // every pass (not a memo lookup, the r15-advice gap), so its
-    // passes evict the family's memo first. Evicting the tree memo
-    // wholesale when one tree trainer runs costs the other family at
-    // most one cold rebuild — bounded, and each family's own trainer
-    // retrains regardless of sweep order.
-    // For the bisecting tree ONE query carries the trainer role:
-    // semdedup_prune rebuilds the full-corpus tree (the larger of the
-    // two family trees) every pass, so the committed bench always
-    // contains a real measured tree build; the kNN-side queries reuse
-    // their memoized half-corpus tree after the first cold pass — the
-    // production shape (an IVF index is built once and queried many
-    // times), and the build cost it skips is bounded above by the
-    // number semdedup_prune measures.
-    val memoTrainers: Map[String, () => Unit] = Map(
-      "bpe_train_steps" -> (() => SparkEntry.evictBpeMemo()),
-      "bpe_pretok_train" -> (() => SparkEntry.evictBpeMemo()),
-      "bpe_byte_train" -> (() => SparkEntry.evictBpeMemo()),
-      "semdedup_prune" -> (() => graft.operators.Similarity.evictTreeMemo()))
     val results: Map[String, Double] = selected.flatMap { case (name, fn) =>
       settleHeap()
       val times = (0 until passes).flatMap { i =>
-        memoTrainers.get(name).foreach(_.apply())
-        val qBusy0 = totalBusyJiffies(); val qSelf0 = selfJiffies()
+        SparkEntry.evictTrainerMemo(name)
+        val q0 = ProcCpu.snapshot()
         val t0 = System.nanoTime()
         val ok =
           // noop WRITE, not count(): a count-star lets the optimizer
@@ -183,10 +123,9 @@ object Bench {
         spark.catalog.clearCache()
         val dt = (System.nanoTime() - t0) / 1e9
         wallByQuery(name) = wallByQuery.getOrElse(name, 0.0) + dt
-        val qBusy1 = totalBusyJiffies(); val qSelf1 = selfJiffies()
-        if (qBusy0 >= 0 && qSelf0 >= 0 && qBusy1 >= 0 && qSelf1 >= 0)
-          foreignByQuery(name) = foreignByQuery.getOrElse(name, 0.0) +
-            ((qBusy1 - qBusy0) - (qSelf1 - qSelf0)) / 100.0
+        val qForeign = ProcCpu.foreignCoreSecs(q0)
+        if (qForeign >= 0)
+          foreignByQuery(name) = foreignByQuery.getOrElse(name, 0.0) + qForeign
         // pass 0 is the cold run for this query (data cache cleared by
         // the previous query; only JIT/codegen carry over) — record it
         // next to the median so cache-amortization is visible
@@ -216,7 +155,7 @@ object Bench {
     // channels (detected by CollectMetrics in the analyzed plan —
     // plan construction triggers no jobs) so queries_observed is
     // populated without perturbing any recorded timing.
-    if (!graft.operators.LshObserve.enabled && only.isEmpty) {
+    if (!graft.operators.LshObserve.enabled && GraftSession.only.isEmpty) {
       sys.props("graft.observe") = "1"
       try selected.foreach { case (name, fn) =>
         try {
@@ -264,15 +203,10 @@ object Bench {
     // close the foreign-CPU window: anything another process burned
     // during the sweep, in core-seconds and as a share of the machine
     val wallSecs = (System.nanoTime() - wall0) / 1e9
-    val hz = 100.0 // USER_HZ on every mainstream Linux
-    val (foreignCoreSecs, foreignRatio) = {
-      val busy1 = totalBusyJiffies(); val self1 = selfJiffies()
-      if (busy0 < 0 || self0 < 0 || busy1 < 0 || self1 < 0) (-1.0, -1.0)
-      else {
-        val f = ((busy1 - busy0) - (self1 - self0)) / hz
-        (f, f / (wallSecs * Runtime.getRuntime.availableProcessors()))
-      }
-    }
+    val foreignCoreSecs = ProcCpu.foreignCoreSecs(run0)
+    val foreignRatio =
+      if (foreignCoreSecs < 0) -1.0
+      else foreignCoreSecs / (wallSecs * Runtime.getRuntime.availableProcessors())
     // self-flag, two gates (r16 lesson: the global 0.08 ratio read
     // `false` while a burst CONCENTRATED — stream_sessionize absorbed
     // 358 foreign core-s, 77% of its own wall×cores — so a brief burst

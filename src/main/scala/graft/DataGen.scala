@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up data generator for the scaling sweep (VERDICT r6 item 1).
@@ -39,16 +39,7 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
 

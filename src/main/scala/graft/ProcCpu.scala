@@ -32,4 +32,20 @@ object ProcCpu {
       val rest = s.substring(s.lastIndexOf(')') + 2).split("\\s+")
       rest(11).toLong + rest(12).toLong
     } catch { case _: Throwable => -1L }
+
+  /** A window's start: machine busy and own jiffies. */
+  final case class Snapshot(busy: Long, self: Long)
+
+  def snapshot(): Snapshot = Snapshot(totalBusyJiffies(), selfJiffies())
+
+  /** Core-seconds OTHER processes burned since `s0`; -1 when /proc is
+    * unreadable. A measured window never reads below 0: the two /proc
+    * files tick separately, so an idle machine can show a few jiffies
+    * more for this JVM than for the whole machine.
+    */
+  def foreignCoreSecs(s0: Snapshot): Double = {
+    val s1 = snapshot()
+    if (s0.busy < 0 || s0.self < 0 || s1.busy < 0 || s1.self < 0) -1.0
+    else math.max(0L, (s1.busy - s0.busy) - (s1.self - s0.self)) / 100.0 // USER_HZ
+  }
 }

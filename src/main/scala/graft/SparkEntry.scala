@@ -55,12 +55,33 @@ object SparkEntry {
     */
   def evictBpeMemo(): Unit = bpeMergeCache.clear()
 
+  /** Memo-trainer honesty, run by Bench and RunOne before every pass of
+    * `query`: the train-once artifacts (BPE merge table, bisecting
+    * tree) survive the inter-pass cache hygiene BY DESIGN — derived
+    * queries are supposed to measure reuse. But each family's
+    * designated TRAINER query must measure a real training run in
+    * every pass (not a memo lookup, the r15-advice gap), so its passes
+    * evict the family's memo first. Evicting the tree memo wholesale
+    * when one tree trainer runs costs the other family at most one
+    * cold rebuild — bounded, and each family's own trainer retrains
+    * regardless of sweep order.
+    * For the bisecting tree ONE query carries the trainer role:
+    * semdedup_prune rebuilds the full-corpus tree (the larger of the
+    * two family trees) every pass, so the committed bench always
+    * contains a real measured tree build; the kNN-side queries reuse
+    * their memoized half-corpus tree after the first cold pass — the
+    * production shape (an IVF index is built once and queried many
+    * times), and the build cost it skips is bounded above by the
+    * number semdedup_prune measures.
+    */
+  def evictTrainerMemo(query: String): Unit = query match {
+    case "bpe_train_steps" | "bpe_pretok_train" | "bpe_byte_train" => evictBpeMemo()
+    case "semdedup_prune" => Similarity.evictTreeMemo()
+    case _ => ()
+  }
+
   private def bpeMergesCached(
       s: SparkSession, dir: String, variant: String): DataFrame = {
-    // dev knob (driver never sets it): bypass the memo so RunOne can
-    // measure the FRESH trainer in steady state for adjudications
-    if (sys.env.contains("SPARK_GRAFT_BPE_NO_MEMO"))
-      bpeMergeCache.remove((s, dir, variant))
     val rows = bpeMergeCache.getOrElseUpdate((s, dir, variant), {
       val fresh = variant match {
         case "pretok" => TextAnalysis.bpeTrainStepsPretok(

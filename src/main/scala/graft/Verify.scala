@@ -1,60 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to the machine's cores (the driver contract is local[32])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // cap AQE coalescing at 16 MB wire-bytes per reducer: agg hash
-      // entries cost ~3-5x their wire bytes on-heap, so the 64 MB
-      // default re-collapsed basket_pairs' 36 M-group aggregation at
-      // sf3 to 8 partitions of ~4.5 M groups each — the GC tail the
-      // r13 chain measured; at 16 MB the same shuffle keeps 26-32
-      // reducers. (A wider initialPartitionNum was tried and reverted:
-      // it taxed every small-scale query with extra tasks while the
-      // advisory cap alone delivers the partition count.)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 reads it only
-      // as a long (ns since epoch), which also keeps ns-precision
-      // ordering bit-identical with the DuckDB oracle.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit, not default-trusted: AQE re-plans skewed shuffle
-      // joins at runtime (SURVEY §4.2); the deterministic salted-join
-      // operators (Skew.scala) stay the fallback for aggregation skew
-      // and engines where AQE is off.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // RocksDB state store + changelog checkpointing for the
-      // streaming replays: the default HDFS-backed provider snapshots
-      // the FULL store per micro-batch per partition (O(state·batches)
-      // I/O — the super-linear term the r9 sweep flagged in
-      // stream_sessionize); RocksDB persists per-batch CHANGELOGS
-      // (deltas), so replay I/O follows the update volume instead
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (driver never
-    // sets it, so the graded path always runs everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    GraftSession.selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -882,10 +882,10 @@ object Similarity {
     * CANONICALIZED analyzed plan string (value equality, no hash
     * collisions); stopped sessions are evicted by the same pass that
     * purges the other per-session memos. Outputs are hash-identical
-    * to a fresh build (spec-pinned); `SPARK_GRAFT_TREE_NO_MEMO`
-    * bypasses for fresh-build adjudication, and Bench evicts before
-    * every pass of each family's designated TRAINER query so the
-    * committed bench still measures a real tree build.
+    * to a fresh build (spec-pinned); Bench and RunOne evict before
+    * every pass of each family's designated TRAINER query
+    * (`SparkEntry.evictTrainerMemo`) so they still measure a real
+    * tree build.
     */
   private type TreeKey =
     (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int)
@@ -999,45 +999,42 @@ object Similarity {
       treeBuilds.incrementAndGet()
       bisectAssigned(corpus, idCol, vecCol, nCells, iters, targetRows, slack)
     }
-    if (sys.env.contains("SPARK_GRAFT_TREE_NO_MEMO")) fresh()
-    else {
-      val s = corpus.sparkSession
-      evictTreeMemoForStopped(s)
-      // key = canonicalized-plan string + semanticHash: the string
-      // alone elides wide field lists past
-      // spark.sql.debug.maxToStringFields (a theoretical cross-corpus
-      // collision, ADVICE r16); a collision now needs both the elided
-      // string AND the full-plan semantic hash to agree
-      val plan = corpus.select(col(idCol), col(vecCol)).queryExecution.analyzed
-      val planKey =
-        s"${plan.semanticHash()}:${plan.canonicalized.toString}"
-      val key: TreeKey = (s, planKey, nCells, iters, targetRows, slack)
-      // fast path: memo hit under the (briefly held) monitor; a stale
-      // entry (blocks lost to executor failure) is evicted — its
-      // remaining blocks freed eagerly, since every outstanding
-      // handle is already broken — and rebuilt below
-      val hit = treeCache.synchronized {
-        val h = treeCache.get(key)
-        if (h != null && treeBlocksIntact(h)) h
-        else {
-          if (h != null) { treeCache.remove(key); unpersistTree(h) }
-          null
-        }
-      }
-      if (hit != null) hit
+    val s = corpus.sparkSession
+    evictTreeMemoForStopped(s)
+    // key = canonicalized-plan string + semanticHash: the string
+    // alone elides wide field lists past
+    // spark.sql.debug.maxToStringFields (a theoretical cross-corpus
+    // collision, ADVICE r16); a collision now needs both the elided
+    // string AND the full-plan semantic hash to agree
+    val plan = corpus.select(col(idCol), col(vecCol)).queryExecution.analyzed
+    val planKey =
+      s"${plan.semanticHash()}:${plan.canonicalized.toString}"
+    val key: TreeKey = (s, planKey, nCells, iters, targetRows, slack)
+    // fast path: memo hit under the (briefly held) monitor; a stale
+    // entry (blocks lost to executor failure) is evicted — its
+    // remaining blocks freed eagerly, since every outstanding
+    // handle is already broken — and rebuilt below
+    val hit = treeCache.synchronized {
+      val h = treeCache.get(key)
+      if (h != null && treeBlocksIntact(h)) h
       else {
-        val task = new java.util.concurrent.FutureTask[TreeVal](
-          () => fresh())
-        val prior = treeInFlight.putIfAbsent(key, task)
-        if (prior != null) prior.get() // share the concurrent build
-        else
-          try {
-            task.run() // OUTSIDE the monitor: builds don't serialize
-            val v = task.get()
-            treeCache.synchronized { treeCache.put(key, v); () }
-            v
-          } finally { treeInFlight.remove(key); () }
+        if (h != null) { treeCache.remove(key); unpersistTree(h) }
+        null
       }
+    }
+    if (hit != null) hit
+    else {
+      val task = new java.util.concurrent.FutureTask[TreeVal](
+        () => fresh())
+      val prior = treeInFlight.putIfAbsent(key, task)
+      if (prior != null) prior.get() // share the concurrent build
+      else
+        try {
+          task.run() // OUTSIDE the monitor: builds don't serialize
+          val v = task.get()
+          treeCache.synchronized { treeCache.put(key, v); () }
+          v
+        } finally { treeInFlight.remove(key); () }
     }
   }
 

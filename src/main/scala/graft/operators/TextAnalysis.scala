@@ -949,7 +949,7 @@ object TextAnalysis {
       // every word: per step that cost a broadcast build + an extra
       // agg job + broadcast-var plumbing in the merged plan — measured
       // at sf0.1 as ~2s of driver-side gaps across the 5-step fold
-      // (ProfileOne: 27 jobs, Σjob 1.3s, wall 3.4s). A 1-row literal
+      // (RunOne job profile: 27 jobs, Σjob 1.3s, wall 3.4s). A 1-row literal
       // is plan-identical in semantics (canonicalMerge with NULL
       // symbols is the identity, so an EMPTY argmax — degenerate
       // corpus with no mergeable pair left — carries the word table

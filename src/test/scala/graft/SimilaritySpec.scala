@@ -432,6 +432,15 @@ class SimilaritySpec extends SparkSpec {
     val freshAgain = run()
     assert(Similarity.treeBuilds.get() == b0 + 2)
     assert(freshAgain == first, "fresh rebuild must be hash-identical too")
+    // the trainer hook Bench and RunOne run before every pass of
+    // semdedup_prune: each pass pays a real build
+    SparkEntry.evictTrainerMemo("semdedup_prune")
+    run()
+    assert(Similarity.treeBuilds.get() == b0 + 3)
+    SparkEntry.evictTrainerMemo("semdedup_prune")
+    run()
+    assert(Similarity.treeBuilds.get() == b0 + 4,
+      "the trainer hook must force a fresh build on every run")
     Similarity.evictTreeMemo()
   }
 

@@ -3,31 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, forked by sbt). */
+/** Shared local session for all suites (one JVM, forked by sbt): the
+  * graded configuration at 4 cores. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror the Verify/Bench session contract so plan pins run
-      // under the same adaptive settings as the graded paths
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // same streaming state-store contract as Verify/Bench/RunOne
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4,
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -5,9 +5,13 @@ Reads a bench.json (the FULL record Bench writes), selects every query
 that needs isolated re-measurement — the `queries_contaminated` list,
 plus any query whose recorded foreign-CPU exceeds the same gate Bench
 applies (foreign core-s > 0.5 x query wall x cores, floor 10 core-s) —
-and runs each through `graft.RunOne --json` in its own JVM,
-sequentially, composing tools/adjudications_r{N}.json automatically
-instead of by hand.
+and runs each through `graft.RunOne <query> <sf> --reps N --json P` in
+its own JVM, sequentially, composing tools/adjudications_r{N}.json
+automatically instead of by hand. RunOne builds Bench's session
+(graft.GraftSession) and, like Bench, evicts a trainer query's memo
+before every rep (SparkEntry.evictTrainerMemo: the three BPE trainers
+and semdedup_prune), so each rep of a trainer pays a real training run
+and its number is comparable with the bench median.
 
 Usage:
   python3 tools/adjudicate.py bench.json tools/adjudications_r17.json \
