@@ -942,8 +942,8 @@ object SparkEntry {
     }),
 
     // the recall-vs-nProbe OPERATING CURVE for the same join — tree
-    // and brute-force truth built once, one beam descent per probe
-    // width, exact integer hit counts per point; this is how a
+    // and brute-force truth built once, one masked beam descent for
+    // every probe width, exact integer hit counts per point; this is how a
     // consumer picks the probe width for a recall target (SURVEY
     // names the >=0.9 point measured here)
     "knn_recall_curve" -> ((s, dir) => {
@@ -988,8 +988,8 @@ object SparkEntry {
     // corpus — the SAME memoized tree the kNN family built, which is
     // the production story (an IVF index is built once and appended
     // to daily, not retrained per batch). Greedy beam-width-1 descent
-    // = the corpus assignment rule, so batch x (2 broadcast child
-    // scores per level) is the whole cost; the oracle replays the
+    // = the corpus assignment rule, so batch x (2 child scores per
+    // level, against the broadcast flat tree) is the whole cost; the oracle replays the
     // descent over its own tree replay bit-exactly.
     "ann_ivf_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
@@ -1018,9 +1018,9 @@ object SparkEntry {
 
     // driver-graded STREAMING mirror of ann_ivf_incremental — the
     // cheapest possible stateless mirror (assignment against the
-    // memoized tree artifact is row-local: one stream-static
-    // broadcast left join per level, no window, zero streaming
-    // state), completing the incremental story: every incremental
+    // memoized tree artifact is row-local: one compiled descent
+    // over the broadcast flat tree, no join, no window, zero
+    // streaming state), completing the incremental story: every incremental
     // channel now has batch + streaming twins including the vector
     // index. Graded VERBATIM by the batch twin's oracle.
     "stream_ann_assign" -> ((s, dir) => {

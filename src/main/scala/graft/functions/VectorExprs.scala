@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types._
@@ -159,6 +159,16 @@ object VectorExprs {
   def spanCorrupt(id: Column, toks: Column, permille: Int, seed: Long): Column =
     GraftBridge.column(SpanCorruptExpr(
       GraftBridge.expression(id), GraftBridge.expression(toks), permille, seed))
+
+  /** array<struct<cell_id, sc, pm>> of the masked beam descent of one
+    * query vector (array<double>) through a broadcast bisecting tree
+    * ([[TreeDescend]]).
+    */
+  def treeDescend(
+      qv: Column,
+      tree: org.apache.spark.broadcast.Broadcast[FlatTree],
+      widths: Seq[Int]): Column =
+    GraftBridge.column(TreeDescend(GraftBridge.expression(qv), tree, widths))
 }
 
 /** Shared FNV-1a 64-bit primitives — single source of truth for the
@@ -1120,4 +1130,229 @@ case class BloomProbe(left: Expression, right: Expression, bits: Array[Long], k:
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomProbe =
     copy(left = l, right = r)
+}
+
+/** A bisecting tree's per-level child centroids as flat arrays — the
+  * broadcast value [[TreeDescend]] walks. Level `l` split the nodes
+  * `node(levelStart(l) until levelStart(l + 1))` (ascending); split
+  * node `j` has the kids `kidStart(j) until kidStart(j + 1)`, and kid
+  * `c` is child `child(c)` (its id is 2·node + child) with centroid
+  * `cent(centStart(c) until centStart(c + 1))`, or NULL when
+  * `centNull(c)`. `centNorm(c)` is the centroid's squared norm,
+  * summed in the same sequential order as [[DotProduct]].
+  */
+final class FlatTree private (
+    val levelStart: Array[Int],
+    val node: Array[Long],
+    val kidStart: Array[Int],
+    val child: Array[Int],
+    val centStart: Array[Int],
+    val cent: Array[Double],
+    val centNull: Array[Boolean]) extends Serializable {
+
+  val centNorm: Array[Double] = Array.tabulate(child.length) { c =>
+    var s = 0.0
+    var i = centStart(c)
+    while (i < centStart(c + 1)) { s += cent(i) * cent(i); i += 1 }
+    s
+  }
+
+  def levels: Int = levelStart.length - 1
+
+  /** Index of `n` among level `l`'s split nodes, or -1 when level `l`
+    * did not split it.
+    */
+  def find(l: Int, n: Long): Int = {
+    val j = java.util.Arrays.binarySearch(node, levelStart(l), levelStart(l + 1), n)
+    if (j >= 0) j else -1
+  }
+}
+
+object FlatTree {
+  /** From per-level (node, kids) rows; a kid is (child, centroid or
+    * null). Row and kid order within a level do not matter.
+    */
+  def apply(levels: Seq[Seq[(Long, Seq[(Int, Array[Double])])]]): FlatTree = {
+    val rows = levels.map(_.sortBy(_._1))
+    val nodes = rows.flatten
+    val kids = nodes.flatMap(_._2)
+    val cents = kids.map(k => Option(k._2).getOrElse(Array.empty[Double]))
+    new FlatTree(
+      rows.scanLeft(0)(_ + _.size).toArray,
+      nodes.map(_._1).toArray,
+      nodes.scanLeft(0)(_ + _._2.size).toArray,
+      kids.map(_._1).toArray,
+      cents.scanLeft(0)(_ + _.length).toArray,
+      cents.flatten.toArray,
+      kids.map(_._2 == null).toArray)
+  }
+}
+
+/** The whole masked beam descent of one query vector through a
+  * broadcast [[FlatTree]], as one row-local expression: the query
+  * starts at the root (node 1, score 1.0, every width's bit set in
+  * its mask `pm`); per level, every beam node the level split is
+  * replaced by its kids (id 2·node + child, score = cosine to the kid
+  * centroid, parent's mask) and every other node passes through with
+  * its carried score; candidates are ordered by score descending
+  * (Spark's double order, NULL last) then node ascending, and a
+  * candidate keeps width p's bit iff its parent had it and fewer than
+  * p earlier candidates have it. Candidates with an empty mask drop.
+  * With one width this is the top-p beam; with several (distinct
+  * powers of two, the widths themselves being the bits) every width's
+  * own beam is carried at once. Emits the final beam as
+  * array<struct<cell_id, sc, pm>>.
+  *
+  * Bit-identical to the declarative per-level loop
+  * (Similarity.treeDescendDeclarative, property-pinned): the cosine
+  * is dot(q, c) / sqrt(|q|²·|c|²) with [[DotProduct]]'s sequential
+  * sums, and a zero divisor follows Spark's `Divide` (NULL, or the
+  * DIVIDE_BY_ZERO error under ANSI mode, read from the session at
+  * construction as `Divide` does); a NULL query vector scores NULL.
+  * The tree travels once per executor as a broadcast, so a descent
+  * needs no join, window, shuffle or checkpoint per level.
+  */
+case class TreeDescend(
+    child: Expression,
+    tree: org.apache.spark.broadcast.Broadcast[FlatTree],
+    widths: Seq[Int],
+    failOnError: Boolean =
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+    extends UnaryExpression {
+
+  require(widths.nonEmpty && widths.forall(_ > 0) && (widths.size == 1 ||
+    (widths.forall(p => (p & (p - 1)) == 0) && widths.distinct.size == widths.size)),
+    "beam widths must be one positive width or distinct powers of two")
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("cell_id", LongType, nullable = false),
+    StructField("sc", DoubleType, nullable = true),
+    StructField("pm", IntegerType, nullable = false))), containsNull = false)
+
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    ExprChecks.requireArray(child.dataType, DoubleType, "tree_descend")
+
+  override def toString: String =
+    s"tree_descend($child, ${tree.id}, ${widths.mkString("[", ",", "]")})"
+
+  private val ws = widths.toArray
+
+  override def eval(input: InternalRow): Any =
+    compute(child.eval(input).asInstanceOf[ArrayData])
+
+  /** Kernel body, also the codegen target (reference-object call). */
+  def compute(qv: ArrayData): ArrayData = {
+    val t = tree.value
+    val qn = if (qv == null) 0.0 else dot(qv, t, -1)
+    var bNode = Array(1L)
+    var bSc = Array(1.0)
+    var bNull = Array(false)
+    var bPm = Array(ws.sum)
+    var l = 0
+    while (l < t.levels) {
+      val at = bNode.map(t.find(l, _))
+      var m = 0
+      var i = 0
+      while (i < at.length) {
+        m += (if (at(i) < 0) 1 else t.kidStart(at(i) + 1) - t.kidStart(at(i)))
+        i += 1
+      }
+      val cNode = new Array[Long](m)
+      val cSc = new Array[Double](m)
+      val cNull = new Array[Boolean](m)
+      val cPm = new Array[Int](m)
+      var o = 0
+      i = 0
+      while (i < at.length) {
+        if (at(i) < 0) { // not split at this level: pass through
+          cNode(o) = bNode(i); cSc(o) = bSc(i); cNull(o) = bNull(i); cPm(o) = bPm(i)
+          o += 1
+        } else {
+          var c = t.kidStart(at(i))
+          while (c < t.kidStart(at(i) + 1)) {
+            cNode(o) = bNode(i) * 2L + t.child(c)
+            cPm(o) = bPm(i)
+            if (qv == null || t.centNull(c)) cNull(o) = true
+            else {
+              val d = java.lang.Math.sqrt(qn * t.centNorm(c))
+              if (d == 0.0) {
+                if (failOnError) throw GraftBridge.divideByZero()
+                cNull(o) = true
+              } else cSc(o) = dot(qv, t, c) / d
+            }
+            o += 1
+            c += 1
+          }
+        }
+        i += 1
+      }
+      val order = Array.tabulate[Integer](m)(Int.box)
+      java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
+        val r =
+          if (cNull(a)) { if (cNull(b)) 0 else 1 }
+          else if (cNull(b)) -1
+          else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(cSc(b), cSc(a))
+        if (r != 0) r else java.lang.Long.compare(cNode(a), cNode(b))
+      })
+      // `seen(w)`: earlier candidates whose parent mask has width w
+      val seen = new Array[Int](ws.length)
+      val keep = new Array[Int](m)
+      var kept = 0
+      var r = 0
+      while (r < m) {
+        val c = order(r).intValue
+        var pm = 0
+        var w = 0
+        while (w < ws.length) {
+          if ((cPm(c) & ws(w)) != 0) {
+            if (seen(w) < ws(w)) pm += ws(w)
+            seen(w) += 1
+          }
+          w += 1
+        }
+        if (pm != 0) { cPm(c) = pm; keep(kept) = c; kept += 1 }
+        r += 1
+      }
+      bNode = Array.tabulate(kept)(j => cNode(keep(j)))
+      bSc = Array.tabulate(kept)(j => cSc(keep(j)))
+      bNull = Array.tabulate(kept)(j => cNull(keep(j)))
+      bPm = Array.tabulate(kept)(j => cPm(keep(j)))
+      l += 1
+    }
+    new GenericArrayData(Array.tabulate[Any](bNode.length)(j =>
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+        bNode(j), if (bNull(j)) null else bSc(j), bPm(j)))))
+  }
+
+  /** Sequential dot of `qv` with kid `c`'s centroid (c = -1: with
+    * itself), over the shorter length, as [[DotProduct]] sums it.
+    */
+  private def dot(qv: ArrayData, t: FlatTree, c: Int): Double = {
+    val n = if (c < 0) qv.numElements()
+      else java.lang.Math.min(qv.numElements(), t.centStart(c + 1) - t.centStart(c))
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += qv.getDouble(i) * (if (c < 0) qv.getDouble(i) else t.cent(t.centStart(c) + i))
+      i += 1
+    }
+    s
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("treeDescend", this, classOf[TreeDescend].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $ref.compute(${c.isNull} ? null : ${c.value});
+      |""".stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TreeDescend =
+    copy(child = newChild)
 }

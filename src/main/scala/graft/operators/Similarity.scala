@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.operators.Caching.TrackedDf
+import graft.functions.FlatTree
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -427,21 +428,15 @@ object Similarity {
     val cntCols = thresholds.zipWithIndex.map { case (t, i) =>
       sum(when(col("cosine") >= t, 1L).otherwise(0L)).as(s"np$i")
     }
-    // the whole ladder reads this ONE-ROW aggregate; persisting it
-    // makes the one-join cost STRUCTURAL — without it the union's N
-    // branches each reference the agg subtree and the claim "costs the
-    // same as one banded run" rests on ReuseExchange recognizing the
-    // identical subtrees, which a canonicalization/AQE change could
-    // silently break (r15 advice)
-    val row = withCos.agg(count(lit(1)).as("n_candidates"), cntCols: _*)
-      .persistTracked
-    thresholds.zipWithIndex.map { case (t, i) =>
-      row.select(lit(t).as("threshold"), col("n_candidates"),
-        col(s"np$i").as("n_pairs"),
+    // the whole ladder is exploded from this ONE-ROW aggregate, its
+    // only consumer: one banded join, however many thresholds
+    withCos.agg(count(lit(1)).as("n_candidates"), cntCols: _*)
+      .select(inline(array(thresholds.zipWithIndex.map { case (t, i) => struct(
+        lit(t).as("threshold"), col("n_candidates"), col(s"np$i").as("n_pairs"),
         (floor(col(s"np$i").cast("double") /
           greatest(col("n_candidates"), lit(1L)).cast("double") * 10000
           + lit(0.5)) / 10000).as("pair_rate"))
-    }.reduce(_.unionByName(_))
+      }: _*)))
   }
 
   def nearDupCosineBandedIncremental(
@@ -861,9 +856,10 @@ object Similarity {
     * count-guarded CTEs).
     *
     * @return (assigned(vid, cv, cell_id, cent_cos),
-    *         per-level packed child-centroid tables — the probe
-    *         ladder [[knnJoinIvf]]'s beam descends, passing through
-    *         nodes a level did not split)
+    *         per-level packed child-centroid tables — collected
+    *         into the broadcast [[FlatTree]] every query descent
+    *         ([[knnJoinIvf]]'s beam) reads, passing through nodes a
+    *         level did not split)
     */
   /** Bisecting-tree memo per (session, corpus plan, params) — the
     * bpeMergesCached train-once pattern applied to the tree: five
@@ -889,7 +885,61 @@ object Similarity {
     */
   private type TreeKey =
     (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int)
-  private type TreeVal = (DataFrame, Seq[DataFrame])
+  private type TreeVal = BisectTree
+
+  /** A trained bisecting tree: its row table, its per-level kid tables
+    * (node, kids array<struct<child, ctv>>), and — built at the tree's
+    * first descent, never before — the kid centroids collected once
+    * into a [[graft.functions.FlatTree]] and broadcast: the value every
+    * [[graft.functions.TreeDescend]] over this tree reads. The memo
+    * entry holds the broadcast, so a memoized tree is collected and
+    * shipped once, however many queries descend it.
+    */
+  private[graft] final class BisectTree(
+      val assigned: DataFrame, val levels: Seq[DataFrame]) {
+    private var flatBc: org.apache.spark.broadcast.Broadcast[FlatTree] = null
+
+    /** The broadcast flat tree; the first call collects every kid
+      * table in one job.
+      */
+    def flat: org.apache.spark.broadcast.Broadcast[FlatTree] = synchronized {
+      if (flatBc == null) {
+        flatBc = assigned.sparkSession.sparkContext.broadcast(collectFlat(levels))
+        treeFlatBuilds.incrementAndGet()
+      }
+      flatBc
+    }
+
+    /** Destroy the broadcast, if built (the eviction paths). */
+    def destroyFlat(): Unit = synchronized {
+      if (flatBc != null) {
+        try flatBc.destroy() catch { case _: Throwable => () }
+        flatBc = null
+      }
+    }
+  }
+
+  /** Every level's kid table in one collect, as a [[FlatTree]]. */
+  private[graft] def collectFlat(levels: Seq[DataFrame]): FlatTree =
+    if (levels.isEmpty) FlatTree(Nil)
+    else {
+      val rows = levels.zipWithIndex
+        .map { case (k, l) => k.select(lit(l).as("lvl"), col("node"), col("kids")) }
+        .reduce(_.unionByName(_))
+        .collect()
+        .groupBy(_.getInt(0))
+      FlatTree(levels.indices.map(l => rows.getOrElse(l, Array.empty).toSeq.map { r =>
+        (r.getLong(1), r.getSeq[org.apache.spark.sql.Row](2).map { kk =>
+          (kk.getAs[Int]("child"),
+            Option(kk.getAs[scala.collection.Seq[Double]]("ctv")).map(_.toArray).orNull)
+        }.toSeq)
+      }))
+    }
+
+  /** Flat-tree broadcasts this JVM has built (spec instrument: proves
+    * one broadcast per memoized tree, not one per call).
+    */
+  private[graft] val treeFlatBuilds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Memo bound: a handful of (corpus, params) trees per JVM. The
     * entries pin lineage-free localCheckpoint blocks (MEMORY_AND_DISK,
@@ -925,14 +975,16 @@ object Similarity {
     * LogicalRDD leaf under the row table and the per-level kid tables
     * is a materialized localCheckpoint RDD — unpersist them directly
     * (async) so eviction returns executor storage NOW, not at the
-    * next GC cycle.
+    * next GC cycle — and destroy its flat-tree broadcast.
     */
-  private def unpersistTree(v: TreeVal): Unit =
-    (v._1 +: v._2).foreach { df =>
+  private def unpersistTree(v: TreeVal): Unit = {
+    (v.assigned +: v.levels).foreach { df =>
       try org.apache.spark.sql.GraftBridge.checkpointRdds(df)
         .foreach(_.unpersist(blocking = false))
       catch { case _: Throwable => () }
     }
+    v.destroyFlat()
+  }
 
   /** Driver-side memo-hit validation (no job): every checkpoint RDD
     * must still report ALL partitions cached. On a real cluster an
@@ -943,9 +995,9 @@ object Similarity {
     */
   private def treeBlocksIntact(v: TreeVal): Boolean =
     try {
-      val sc = v._1.sparkSession.sparkContext
+      val sc = v.assigned.sparkSession.sparkContext
       val info = sc.getRDDStorageInfo
-      (v._1 +: v._2)
+      (v.assigned +: v.levels)
         .flatMap(df => org.apache.spark.sql.GraftBridge.checkpointRdds(df))
         .forall { r =>
           info.find(_.id == r.id)
@@ -968,8 +1020,9 @@ object Similarity {
 
   /** Drop trees owned by stopped sessions (long-lived-JVM hygiene —
     * a stopped session's entries would pin its SparkContext graph).
-    * Block unpersist is skipped: a stopped context has no executors
-    * to message, dropping the references is all there is to do.
+    * Block unpersist and broadcast destroy are skipped: a stopped
+    * context has no executors to message, dropping the references is
+    * all there is to do.
     */
   def evictTreeMemoForStopped(live: org.apache.spark.sql.SparkSession): Unit =
     treeCache.synchronized {
@@ -987,17 +1040,19 @@ object Similarity {
   private val treeInFlight = new java.util.concurrent.ConcurrentHashMap[
     TreeKey, java.util.concurrent.FutureTask[TreeVal]]()
 
-  private def bisectAssignedCached(
+  private[graft] def bisectAssignedCached(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       nCells: Int,
       iters: Int,
       targetRows: Int = 0,
-      slack: Int = 4): (DataFrame, Seq[DataFrame]) = {
+      slack: Int = 4): BisectTree = {
     def fresh() = {
       treeBuilds.incrementAndGet()
-      bisectAssigned(corpus, idCol, vecCol, nCells, iters, targetRows, slack)
+      val (assigned, levels) =
+        bisectAssigned(corpus, idCol, vecCol, nCells, iters, targetRows, slack)
+      new BisectTree(assigned, levels)
     }
     val s = corpus.sparkSession
     evictTreeMemoForStopped(s)
@@ -1484,9 +1539,8 @@ object Similarity {
       nCells: Int,
       iters: Int,
       targetRows: Int): DataFrame = {
-    val (assigned, _) =
-      bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
-    assigned
+    bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
+      .assigned
       .select(col("vid"), col("cv"), col("cell_id"),
         floor(col("cent_cos") * lit(1000000.0) + lit(0.5))
           .cast("long").as("cent_cos_micro"))
@@ -1570,13 +1624,13 @@ object Similarity {
     }
     val prunedRow = best.agg(prunedCols.head, prunedCols.tail: _*)
     val totalRow = assigned.agg(count(lit(1)).as("n_total"))
-    val base = totalRow.crossJoin(broadcast(prunedRow))
-    epss.zipWithIndex.map { case (e, i) =>
-      base.select(lit(e).as("eps"), col("n_total"),
-        col(s"np$i").as("n_pruned"),
+    // one row per eps, exploded from the one aggregate row
+    totalRow.crossJoin(broadcast(prunedRow))
+      .select(inline(array(epss.zipWithIndex.map { case (e, i) => struct(
+        lit(e).as("eps"), col("n_total"), col(s"np$i").as("n_pruned"),
         (floor(col(s"np$i").cast("double") / col("n_total").cast("double")
           * 10000 + lit(0.5)) / 10000).as("prune_rate"))
-    }.reduce(_.unionByName(_))
+      }: _*)))
   }
 
   /** Measured fidelity of [[semDedup]]'s order-independent DOMINANCE
@@ -1651,79 +1705,85 @@ object Similarity {
         col("n_kept_dom"), col("n_kept_greedy"), col("n_kept_both"))
   }
 
-  /** Distributed kNN JOIN: top-k cosine neighbors from `corpus` for
-    * EVERY row of a LARGE query set — the retrieval shape of
-    * kNN-LM / RAG pretraining (Khandelwal et al. 2020; Borgeaud et
-    * al. 2022), where the "query set" is the training corpus itself
-    * and nothing fits in a broadcast.
-    *
-    * [[annTopKBruteForce]] and [[annIvfWithCentroids]] both hard-wire
-    * a broadcast of the small side; this operator is the third point
-    * in that design space: BOTH sides stay distributed. Corpus rows
-    * descend the log-depth [[bisectAssigned]] split tree (per level a
-    * broadcast equi-join on `node` against that level's ≤2^{level+1}
-    * child centroids — O(n·log k) total, never the flat n·k argmax);
-    * queries walk the SAME tree as an nProbe-wide beam; the candidate
-    * join is then a plain equi-join on cell_id, left to Catalyst/AQE
-    * — broadcast when one side happens to be small, shuffle
-    * hash/merge with skew-split when both are large. Per-query top-k
-    * is a window over query_id: millions of queries → millions of
-    * small partitions, no degenerate sort task.
-    *
-    * Recall follows the IVF geometry (measured by [[annRecallEval]]
-    * at the same nCells/nProbe point — every approximate channel in
-    * this repo ships with a number).
+  /** The masked beam descent of every query row through a memoized
+    * tree: one explode of [[graft.functions.TreeDescend]] over the
+    * query rows, reading the tree's broadcast [[FlatTree]] — row-local,
+    * so no join, window, shuffle or checkpoint per level. `widths` is
+    * one beam width, or a ladder of distinct powers of two carried at
+    * once as the bitmask `pm`. Emits (query_id, qv, cell_id, sc, pm):
+    * `sc` is the cell's last assignment cosine (the corpus side's
+    * cent_cos semantics — the drift report's batch-side signal).
     */
-  /** Beam descent of the bisecting split tree: each query walks the
-    * SAME per-level kid tables the corpus was assigned by, keeping
-    * its nProbe best (score desc, node asc) child nodes per level —
-    * O(q·nProbe·log k) scores total, where probing a flat k-cell
-    * table is O(q·k). Every per-level top-n window partitions by
-    * query_id (millions of small partitions, one query-side shuffle
-    * reused across levels — the per-level joins are broadcasts and
-    * preserve the partitioning). Emits (query_id, qv, cell_id).
-    */
-  private def beamDescend(
+  private def descend(
       queries: DataFrame,
       idCol: String,
       vecCol: String,
+      tree: BisectTree,
+      widths: Seq[Int]): DataFrame =
+    queries
+      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+      .select(col("query_id"), col("qv"), explode(
+        graft.functions.VectorExprs.treeDescend(col("qv"), tree.flat, widths)).as("b"))
+      .select(col("query_id"), col("qv"), col("b.cell_id").as("cell_id"),
+        col("b.sc").as("sc"), col("b.pm").as("pm"))
+
+  /** Count of strictly-preceding rows in the window's order whose flag
+    * holds — with a width-p mask bit as the flag, rank-1 within the
+    * width-p subset.
+    */
+  private def precCnt(w: org.apache.spark.sql.expressions.WindowSpec,
+      flag: Column): Column =
+    coalesce(sum(when(flag, 1L).otherwise(0L)).over(w), lit(0L))
+
+  /** The declarative per-level form of [[descend]] — the reference
+    * [[graft.functions.TreeDescend]] is property-pinned against
+    * (TreeDescendSpec). Per level: a broadcast join of the beam on
+    * `node` against the level's kid table and an explode of the kids
+    * (nodes the level did not split pass through with their carried
+    * score), then one window over query_id ordered (score desc, node
+    * asc) counting, per width p, the strictly-earlier candidates whose
+    * mask has p; a candidate keeps bit p iff its parent had it and
+    * that count is < p. Each level's beam is lazily checkpointed (hit ∪
+    * miss reads the previous beam twice, so an uncut chain would
+    * double the logical plan per level).
+    *
+    * @param queries (query_id, qv array<double>)
+    * @return (query_id, cell_id, sc, pm)
+    */
+  private[graft] def treeDescendDeclarative(
+      queries: DataFrame,
       levels: Seq[DataFrame],
-      nProbe: Int): DataFrame = {
-    var beam = queries
-      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"),
-        lit(1L).as("node"), lit(1.0).as("sc"))
+      widths: Seq[Int]): DataFrame = {
+    var beam = queries.select(col("query_id"), col("qv"),
+      lit(1L).as("node"), lit(1.0).as("sc"), lit(widths.sum).as("pm"))
     val wBeam = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("sc").desc, col("cnode"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     for (kids <- levels) {
-      // nodes a level did not split (size-guarded extension) have no
-      // kids row: the beam entry passes through with its carried
-      // score and competes in the same top-nProbe rank
       val hit = beam.join(broadcast(kids), Seq("node"))
-        .select(col("query_id"), col("qv"), col("node"),
+        .select(col("query_id"), col("qv"), col("node"), col("pm"),
           explode(col("kids")).as("kk"))
-        .select(col("query_id"), col("qv"),
+        .select(col("query_id"), col("qv"), col("pm"),
           (col("node") * lit(2L) + col("kk.child").cast("long")).as("cnode"),
           cosine(col("qv"), col("kk.ctv")).as("sc"))
       val miss = beam.join(broadcast(kids), Seq("node"), "left_anti")
-        .select(col("query_id"), col("qv"), col("node").as("cnode"), col("sc"))
-      // LAZY plan truncation per level: hit ∪ miss references the
-      // previous beam twice, so a lineage-carrying chain doubles the
-      // logical plan per level (2^depth driver-side analysis — the
-      // same Catalyst spin the row table hit); eager=false truncates
-      // to a LogicalRDD without spending a materialization job, the
-      // RDD computes inside the next level's job
-      beam = hit.unionByName(miss)
-        .withColumn("rn", row_number().over(wBeam))
-        .where(col("rn") <= nProbe)
-        .select(col("query_id"), col("qv"), col("cnode").as("node"), col("sc"))
+        .select(col("query_id"), col("qv"), col("pm"),
+          col("node").as("cnode"), col("sc"))
+      val ranked = hit.unionByName(miss)
+        .select(col("query_id") +: col("qv") +: col("cnode") +: col("sc") +:
+          col("pm") +: widths.map(p =>
+            precCnt(wBeam, col("pm").bitwiseAND(lit(p)) =!= 0).as(s"c$p")): _*)
+      beam = ranked
+        .withColumn("pm2", widths.map(p =>
+          when(col("pm").bitwiseAND(lit(p)) =!= 0 && col(s"c$p") < p, lit(p))
+            .otherwise(lit(0))).reduce(_ + _))
+        .where(col("pm2") =!= 0)
+        .select(col("query_id"), col("qv"), col("cnode").as("node"),
+          col("sc"), col("pm2").as("pm"))
         .localCheckpoint(false)
     }
-    // `sc` rides along: each row's LAST assignment cosine (the same
-    // semantics as the corpus side's cent_cos) — the drift report's
-    // batch-side signal; other consumers ignore the extra column
-    beam.select(col("query_id"), col("qv"), col("node").as("cell_id"),
-      col("sc"))
+    beam.select(col("query_id"), col("node").as("cell_id"), col("sc"), col("pm"))
   }
 
   /** Measured recall@k of the distributed kNN join across a LADDER of
@@ -1734,19 +1794,21 @@ object Similarity {
     * The whole ladder costs ONE tree build, ONE beam descent and ONE
     * candidate join: widths must be distinct powers of two, and every
     * beam row carries the SET of widths it survives at as a bitmask
-    * `pm` (the width values themselves are the bits). Per level, one
-    * window (partition query_id, order score desc / cnode asc)
-    * computes for each width p the count of strictly-better rows
-    * whose mask has p — rank-within-the-p-beam without materializing
-    * p beams — and a row's new mask keeps bit p iff its parent had p
-    * and that count < p. This is EXACT per-width beam semantics (the
-    * per-width beams are NOT nested in general — a narrow-beam
-    * survivor can be pushed out of a wider beam by children of
-    * parents only the wider beam kept — which is why the mask is a
-    * set, not a single min-width). The candidate stage reuses the
-    * same trick on cosine rank to take each width's top-k in one
-    * window, and hits against the once-built brute-force truth
-    * aggregate in a single pass.
+    * `pm` (the width values themselves are the bits). The descent is
+    * one row-local [[graft.functions.TreeDescend]] per sampled query
+    * over the tree's broadcast flat centroids: per level it ranks the
+    * candidates (score desc, cnode asc), counts for each width p the
+    * strictly-better candidates whose mask has p — rank-within-the-p-
+    * beam without materializing p beams — and keeps bit p iff the
+    * parent had p and that count < p. This is EXACT per-width beam
+    * semantics (the per-width beams are NOT nested in general — a
+    * narrow-beam survivor can be pushed out of a wider beam by
+    * children of parents only the wider beam kept — which is why the
+    * mask is a set, not a single min-width). The candidate stage
+    * reuses the same count on cosine rank to take each width's top-k
+    * in one window (the plan's only one), and hits against the
+    * once-built brute-force truth aggregate in a single pass; the
+    * per-width rows are exploded from that one aggregate row.
     *
     * @return one row per probe width: (n_probe, n_queries, n_truth,
     *         n_hit, recall) — exact integer counts, corpus-level
@@ -1767,52 +1829,17 @@ object Similarity {
     require(nProbes.nonEmpty && nProbes.forall(p => p > 0 && (p & (p - 1)) == 0)
       && nProbes.distinct.size == nProbes.size,
       "probe widths must be distinct powers of two (they double as mask bits)")
-    val maskAll = nProbes.sum
     val nQ = queries.count()
     val mod = math.max(sampleMod.toLong, (nQ + 255) / 256).toInt
     val qs = queries.where(pmod(col(idCol), lit(mod.toLong)) === 0)
     val truth = annTopKBruteForce(qs, corpus, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
       .persistTracked
-    val (asg, levels) =
+    val tree =
       bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
-    val assigned = asg
+    val assigned = tree.assigned
       .select(col("vid").as("neighbor_id"), col("cv"), col("cell_id"))
-    // count of strictly-preceding rows in the (score desc, id asc)
-    // order whose mask has bit p — rank-1 within the width-p subset
-    def precCnt(w: org.apache.spark.sql.expressions.WindowSpec,
-        flag: Column): Column =
-      coalesce(sum(when(flag, 1L).otherwise(0L)).over(w), lit(0L))
-    var beam = qs.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"),
-      lit(1L).as("node"), lit(1.0).as("sc"), lit(maskAll).as("pm"))
-    val wBeam = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sc").desc, col("cnode"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    for (kids <- levels) {
-      val hit = beam.join(broadcast(kids), Seq("node"))
-        .select(col("query_id"), col("qv"), col("node"), col("pm"),
-          explode(col("kids")).as("kk"))
-        .select(col("query_id"), col("qv"), col("pm"),
-          (col("node") * lit(2L) + col("kk.child").cast("long")).as("cnode"),
-          cosine(col("qv"), col("kk.ctv")).as("sc"))
-      val miss = beam.join(broadcast(kids), Seq("node"), "left_anti")
-        .select(col("query_id"), col("qv"), col("pm"),
-          col("node").as("cnode"), col("sc"))
-      val ranked = hit.unionByName(miss)
-        .select(col("query_id") +: col("qv") +: col("cnode") +: col("sc") +:
-          col("pm") +: nProbes.map(p =>
-            precCnt(wBeam, col("pm").bitwiseAND(lit(p)) =!= 0).as(s"c$p")): _*)
-      beam = ranked
-        .withColumn("pm2", nProbes.map(p =>
-          when(col("pm").bitwiseAND(lit(p)) =!= 0 && col(s"c$p") < p, lit(p))
-            .otherwise(lit(0))).reduce(_ + _))
-        .where(col("pm2") =!= 0)
-        .select(col("query_id"), col("qv"), col("cnode").as("node"),
-          col("sc"), col("pm2").as("pm"))
-        .localCheckpoint(false)
-    }
+    val beam = descend(qs, idCol, vecCol, tree, nProbes)
     // one candidate join for the whole ladder; the same
     // preceding-count trick ranks each width's top-k on cosine
     val wCand = org.apache.spark.sql.expressions.Window
@@ -1820,8 +1847,8 @@ object Similarity {
       .orderBy(col("cosine").desc, col("neighbor_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val cand = assigned
-      .join(beam.select(col("query_id"), col("qv"), col("node").as("cell_id"),
-        col("pm")), Seq("cell_id"))
+      .join(beam.select(col("query_id"), col("qv"), col("cell_id"), col("pm")),
+        Seq("cell_id"))
       .withColumn("cosine", cosine(col("qv"), col("cv")))
     val ranked = cand
       .select(col("query_id") +: col("neighbor_id") +: col("pm") +:
@@ -1835,13 +1862,14 @@ object Similarity {
     val hitRow = ranked.agg(hitCols.head, hitCols.tail: _*)
     val truthCnt = truth.agg(count(lit(1)).as("n_truth"),
       countDistinct(col("query_id")).as("n_queries"))
-    val base = truthCnt.crossJoin(broadcast(hitRow))
-    nProbes.map { p =>
-      base.select(lit(p).as("n_probe"), col("n_queries"), col("n_truth"),
+    // one row per width, exploded from the one aggregate row: every
+    // width reads the same truth count and hit aggregate
+    truthCnt.crossJoin(broadcast(hitRow))
+      .select(inline(array(nProbes.map(p => struct(
+        lit(p).as("n_probe"), col("n_queries"), col("n_truth"),
         col(s"h$p").as("n_hit"),
         (floor(col(s"h$p").cast("double") / col("n_truth").cast("double")
-          * 10000 + lit(0.5)) / 10000).as("recall"))
-    }.reduce(_.unionByName(_))
+          * 10000 + lit(0.5)) / 10000).as("recall"))): _*)))
   }
 
   /** The vector index's row table as rows: every corpus vector's cell
@@ -1855,19 +1883,19 @@ object Similarity {
       nCells: Int,
       iters: Int,
       targetRows: Int = 0): DataFrame = {
-    val (asg, _) =
-      bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
-    asg.select(col("vid").as(idCol), col("cell_id"))
+    bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
+      .assigned.select(col("vid").as(idCol), col("cell_id"))
   }
 
   /** Incremental ANN index refresh: ASSIGN a new batch against the
     * persisted tree artifact instead of retraining — the vector-index
-    * twin of dedup_incremental. Batch rows descend the memoized
-    * per-level kid tables greedily (beam width 1 — EXACTLY the rule
-    * corpus rows were assigned by: argmax child on (cosine desc,
-    * child asc), pass through nodes a level did not split), so the
-    * daily batch costs batch × (≤2 broadcast child scores per level),
-    * never batch × corpus and never a rebuild. Because the descent IS
+    * twin of dedup_incremental. Batch rows descend the memoized tree
+    * greedily (beam width 1 — EXACTLY the rule corpus rows were
+    * assigned by: argmax child on (cosine desc, child asc), pass
+    * through nodes a level did not split) in one row-local
+    * [[graft.functions.TreeDescend]], so the daily batch costs batch ×
+    * (≤2 child scores per level) in the scan stage, never batch ×
+    * corpus and never a rebuild. Because the descent IS
     * the assignment rule, a corpus row descending its own tree lands
     * in its stored cell bit-exactly (spec-pinned) — incremental
     * assignment and full assignment agree on the union by
@@ -1883,9 +1911,9 @@ object Similarity {
       nCells: Int,
       iters: Int,
       targetRows: Int = 0): DataFrame = {
-    val (_, levels) =
+    val tree =
       bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
-    beamDescend(batch, idCol, vecCol, levels, nProbe = 1)
+    descend(batch, idCol, vecCol, tree, Seq(1))
       .select(col("query_id").as(idCol), col("cell_id"))
   }
 
@@ -1919,14 +1947,14 @@ object Similarity {
       nCells: Int,
       iters: Int,
       targetRows: Int = 0): DataFrame = {
-    val (asg, levels) =
+    val tree =
       bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
     val micro = (c: Column) => floor(c * lit(1048576.0) + lit(0.5)).cast("long")
-    val u = asg
+    val u = tree.assigned
       .select(col("cell_id"), lit(true).as("isc"),
         micro(col("cent_cos")).as("cm"))
       .unionByName(
-        beamDescend(batch, idCol, vecCol, levels, nProbe = 1)
+        descend(batch, idCol, vecCol, tree, Seq(1))
           .select(col("cell_id"), lit(false).as("isc"),
             micro(col("sc")).as("cm")))
     val perCell = u.groupBy(col("cell_id"))
@@ -1962,18 +1990,12 @@ object Similarity {
 
   /** STREAMING incremental ANN assignment — the stateless mirror of
     * [[assignIncremental]]: each micro-batch of new vectors descends
-    * the memoized tree artifact with the same greedy width-1 rule,
-    * expressed as one stream-static broadcast LEFT join per level
-    * plus row-local arithmetic (no window, no state — a beam of
-    * width 1 per row never needs a rank). Per level: a node's ≤2
-    * child centroids arrive PIVOTED onto one static row (ctv0,
-    * ctv1), the child pick is the row-local comparison cos₁ > cos₀
-    * (ties → child 0 — exactly the (cosine desc, child asc) argmax),
-    * and a node the level did not split has no static row and passes
-    * through unchanged. Batch-equivalence with [[assignIncremental]]
-    * is structural: same levels, same rule, same arithmetic
-    * (spec-pinned); the driver grades it against the batch oracle
-    * verbatim.
+    * the memoized tree artifact through the SAME row-local width-1
+    * [[graft.functions.TreeDescend]] over the same broadcast flat tree
+    * (no join, no window, no state — a stream-static plan of one
+    * explode). Batch-equivalence with [[assignIncremental]] is
+    * structural: same expression, same tree (spec-pinned); the driver
+    * grades it against the batch oracle verbatim.
     */
   def assignIncrementalStream(
       batchStream: DataFrame,
@@ -1983,30 +2005,39 @@ object Similarity {
       nCells: Int,
       iters: Int,
       targetRows: Int = 0): DataFrame = {
-    val (_, levels) =
+    val tree =
       bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
-    var st = batchStream
-      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"),
-        lit(1L).as("node"))
-    for (kids <- levels) {
-      // pivot the ≤2 children onto one row per node; guarded
-      // element access (ANSI mode throws on out-of-bounds)
-      val kflat = kids.select(col("node"),
-        col("kids").getItem(0).getField("ctv").as("ctv0"),
-        when(size(col("kids")) >= 2,
-          col("kids").getItem(1).getField("ctv")).as("ctv1"))
-      st = st.join(broadcast(kflat), Seq("node"), "left_outer")
-        .select(col("query_id"), col("qv"),
-          when(col("ctv0").isNull, col("node")) // pass-through
-            .otherwise(col("node") * lit(2L) +
-              when(col("ctv1").isNotNull &&
-                cosine(col("qv"), col("ctv1")) > cosine(col("qv"), col("ctv0")),
-                lit(1L)).otherwise(lit(0L)))
-            .as("node"))
-    }
-    st.select(col("query_id").as(idCol), col("node").as("cell_id"))
+    descend(batchStream, idCol, vecCol, tree, Seq(1))
+      .select(col("query_id").as(idCol), col("cell_id"))
   }
 
+  /** Distributed kNN JOIN: top-k cosine neighbors from `corpus` for
+    * EVERY row of a LARGE query set — the retrieval shape of
+    * kNN-LM / RAG pretraining (Khandelwal et al. 2020; Borgeaud et
+    * al. 2022), where the "query set" is the training corpus itself
+    * and nothing fits in a broadcast.
+    *
+    * [[annTopKBruteForce]] and [[annIvfWithCentroids]] both hard-wire
+    * a broadcast of the small side; this operator is the third point
+    * in that design space: BOTH sides stay distributed. Corpus rows
+    * descend the log-depth [[bisectAssigned]] split tree (per level a
+    * broadcast equi-join on `node` against that level's ≤2^{level+1}
+    * child centroids — O(n·log k) total, never the flat n·k argmax);
+    * queries walk the SAME tree as an nProbe-wide beam in one
+    * row-local [[graft.functions.TreeDescend]] over the tree's
+    * broadcast flat centroids (O(q·nProbe·log k) scores in the scan
+    * stage, where probing a flat k-cell table is O(q·k)); the
+    * candidate join is then a plain equi-join on cell_id, left to
+    * Catalyst/AQE — broadcast when one side happens to be small,
+    * shuffle hash/merge with skew-split when both are large. Per-query
+    * top-k is a window over query_id (the plan's only window):
+    * millions of queries → millions of small partitions, no
+    * degenerate sort task.
+    *
+    * Recall follows the IVF geometry (measured by [[annRecallEval]]
+    * at the same nCells/nProbe point — every approximate channel in
+    * this repo ships with a number).
+    */
   def knnJoinIvf(
       queries: DataFrame,
       corpus: DataFrame,
@@ -2017,11 +2048,12 @@ object Similarity {
       nProbe: Int,
       iters: Int,
       targetRows: Int = 0): DataFrame = {
-    val (asg, levels) =
+    val tree =
       bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
-    val assigned = asg
+    val assigned = tree.assigned
       .select(col("vid").as("neighbor_id"), col("cv"), col("cell_id"))
-    val probes = beamDescend(queries, idCol, vecCol, levels, nProbe)
+    val probes = descend(queries, idCol, vecCol, tree, Seq(nProbe))
+      .select(col("query_id"), col("qv"), col("cell_id"))
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))

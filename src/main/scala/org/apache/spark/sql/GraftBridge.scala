@@ -23,4 +23,10 @@ object GraftBridge {
     df.queryExecution.analyzed.collect {
       case l: execution.LogicalRDD => l.rdd
     }
+
+  /** Spark's DIVIDE_BY_ZERO error, as an ANSI-mode `Divide` raises it
+    * (for kernels that replay a Column-form division bit for bit).
+    */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
 }

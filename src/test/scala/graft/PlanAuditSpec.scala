@@ -524,34 +524,27 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("knn_join_ivf: candidate join is an unhinted EQUI join on cell_id — never nested-loop") {
-    // the both-sides-distributed retrieval path: corpus assignment and
-    // the query beam both walk the bisecting tree via broadcast
-    // EQUI-joins on `node` (≤2^{level+1} child centroids per level —
-    // never a flat k-cell cross join), and the candidate meet on
+    // the both-sides-distributed retrieval path: corpus assignment
+    // walks the bisecting tree via broadcast EQUI-joins on `node`
+    // (≤2^{level+1} child centroids per level — never a flat k-cell
+    // cross join), the query beam is one row-local tree_descend over
+    // the tree's broadcast flat centroids, and the candidate meet on
     // cell_id must plan as a hash/sort-merge equi-join Catalyst/AQE is
     // free to re-plan; no nested-loop join anywhere
     val p = plan("knn_join_ivf")
     assert(!p.contains("CartesianProduct"), s"cartesian:\n$p")
     assert("""(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[cell_id""".r
       .findFirstIn(p).isDefined, s"no equi-join on cell_id:\n$p")
-    // BuildRight nested loops are the 1-row broadcasts: the beam's
-    // ROOT-level join carries node = lit(1) on the stream side, so
-    // Catalyst constant-folds the equi-condition and plans the single
-    // root child-centroid row as an Inner BNLJ — one broadcast row,
-    // the same allowed shape as crossJoin(broadcast(1-row agg)).
-    // Deeper levels have real node variation and stay hash joins.
+    // a nested loop may only be a 1-row BuildRight broadcast (the
+    // allowed crossJoin(broadcast(1-row agg)) shape); the query side
+    // joins nothing per level, so none is expected here
     val bnlj = """BroadcastNestedLoopJoin[^\n]*""".r.findAllIn(p).toSeq
     assert(bnlj.forall(_.contains("BuildRight")),
       s"nested loop beyond 1-row broadcasts:\n$p")
     // every window partitions by query_id: millions of small
     // partitions, never a global (unpartitioned) sort task. The beam
-    // levels' own top-nProbe windows are plan-truncated per level
-    // (each beam level lazily checkpoints to keep driver-side
-    // analysis O(depth), so the final visible plan holds only the
-    // rank window) — their shape is pinned where they're built: the
-    // wBeam spec in Similarity.knnJoinIvf partitions by query_id by
-    // construction (a truncated plan hides them from this audit, so
-    // the source is the pin).
+    // ranks inside tree_descend, per query row, so the plan's one
+    // window is the candidate rank (pinned below with the ladder)
     val q = SparkEntry.queries("knn_join_ivf")(spark, sfDir)
     val windows = q.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
@@ -559,6 +552,52 @@ class PlanAuditSpec extends SparkSpec {
     assert(windows.nonEmpty, "per-query rank window missing")
     assert(windows.forall(_.partitionSpec.nonEmpty),
       "unpartitioned window in the retrieval path")
+  }
+
+  /** The tree-descent shape of a kNN plan: (window count, LogicalRDD
+    * leaves other than the tree's row table, tree_descend generators).
+    * A per-level descent shows up as extra windows or as a checkpointed
+    * beam / kid-table leaf, since each level's beam is cut to a
+    * LogicalRDD.
+    */
+  private def descentShape(name: String): (Int, Seq[String], Int) = {
+    val opt = SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
+    val windows = opt.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.size
+    val leaves = opt.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if !l.output.exists(_.name == "vid") => l.output.map(_.name).mkString(",")
+    }
+    val descents = opt.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+          if g.generator.exists(_.isInstanceOf[graft.functions.TreeDescend]) => g
+    }.size
+    (windows, leaves, descents)
+  }
+
+  test("knn_recall_curve / knn_join_ivf: one compiled descent, one window, no kid-table join") {
+    val offenders = Seq("knn_recall_curve", "knn_join_ivf").flatMap { name =>
+      val (windows, leaves, descents) = descentShape(name)
+      Seq(
+        (windows != 1) -> s"$name: $windows Window nodes, want only the candidate rank",
+        leaves.nonEmpty ->
+          s"$name: per-level kid-table or beam leaves: ${leaves.mkString("; ")}",
+        (descents != 1) -> s"$name: $descents tree_descend generators, want 1")
+        .collect { case (true, msg) => msg }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("curve operators emit their ladder rows from one aggregate row: no Union") {
+    val offenders =
+      Seq("knn_recall_curve", "semdedup_rate_curve", "neardup_cosine_rate_curve").flatMap { name =>
+        val unions = SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
+          .collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }
+        graft.operators.Caching.release()
+        if (unions.isEmpty) None else Some(s"$name: ${unions.size} Union nodes")
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("semdedup_prune: broadcast assignment, equi dominance join, windowless") {

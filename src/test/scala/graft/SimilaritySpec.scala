@@ -442,6 +442,39 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.treeBuilds.get() == b0 + 4,
       "the trainer hook must force a fresh build on every run")
     Similarity.evictTreeMemo()
+    // the flat-tree broadcast every descent reads: built at a memoized
+    // tree's first descent, shared by later descents, destroyed with
+    // the entry (explicit eviction and the stale-entry path)
+    val corpus = emb.where(col("vec_id") % 2 === 1)
+    def curve() = Similarity.knnJoinRecallCurve(emb.where(col("vec_id") % 2 === 0),
+      corpus, "vec_id", "embedding", k = 3, nCells = 8, nProbes = Seq(1, 2),
+      iters = 1, sampleMod = 1, targetRows = 16).collect().map(_.toString).sorted.toSeq
+    def tree() = Similarity.bisectAssignedCached(corpus, "vec_id", "embedding",
+      nCells = 8, iters = 1, targetRows = 16)
+    val f0 = Similarity.treeFlatBuilds.get()
+    val c1 = curve()
+    assert(Similarity.treeFlatBuilds.get() == f0 + 1, "first descent builds the broadcast")
+    assert(curve() == c1)
+    assert(Similarity.treeFlatBuilds.get() == f0 + 1,
+      "second run must reuse the memoized tree's broadcast")
+    val bc = tree().flat
+    Similarity.evictTreeMemo()
+    assert(intercept[Exception](bc.value).getMessage.contains("destroyed"),
+      "evictTreeMemo must destroy the broadcast")
+    assert(curve() == c1, "rebuilt tree and broadcast must be hash-identical")
+    assert(Similarity.treeFlatBuilds.get() == f0 + 2,
+      "after eviction the next run builds a new broadcast")
+    // lost blocks: the stale entry is rebuilt and its broadcast destroyed
+    val stale = tree()
+    val staleBc = stale.flat
+    org.apache.spark.sql.GraftBridge.checkpointRdds(stale.assigned)
+      .foreach(_.unpersist(blocking = true))
+    val t1 = Similarity.treeBuilds.get()
+    assert(tree() ne stale)
+    assert(Similarity.treeBuilds.get() == t1 + 1, "a stale entry must be rebuilt")
+    assert(intercept[Exception](staleBc.value).getMessage.contains("destroyed"),
+      "the stale-entry path must destroy the broadcast")
+    Similarity.evictTreeMemo()
   }
 
   test("semDedup keeps everything when eps exceeds every intra-cell cosine") {
