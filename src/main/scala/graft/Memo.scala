@@ -1,0 +1,131 @@
+package graft
+
+import java.util.concurrent.{ExecutionException, FutureTask}
+
+import graft.operators.Similarity.BisectTree
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+/** The work graft reuses across the queries of one session, in one
+  * place. Every entry is keyed by (session, family, key), and the
+  * families are fixed here:
+  *
+  *  - [[Tables]]: parquet reads per path. Repeated queries in one run
+  *    skip re-listing files and re-reading footers, the per-query
+  *    fixed cost that dominates a benchmark sweep.
+  *  - [[ProbeWidths]]: knn_join_ivf's calibrated probe width per data
+  *    dir: calibrate once, deploy many.
+  *  - [[BpeMerges]]: the learned BPE merge table per (dir, word-source
+  *    variant). It is exactly `bpeSteps` (≤ 16) rows, a bounded
+  *    driver-side collect. Only the first BPE query of a session pays
+  *    the per-step pair-count and argmax rounds; encode and vocab
+  *    derive from the literal, hash-identical to a retrain.
+  *  - [[Trees]]: the bisecting tree per (corpus plan, params), shared
+  *    by the kNN and SemDeDup queries that would otherwise retrain the
+  *    identical tree. Its row and kid tables are localCheckpoint'ed
+  *    RDDs (lineage-free, MEMORY_AND_DISK, executor-side), so reuse
+  *    reads the same blocks; the entry also holds the tree's
+  *    `FlatTree` broadcast, collected and shipped once per tree.
+  *  - [[Intermediates]]: frames an operator persists because it reads
+  *    them more than once (`Caching.persistTracked`). The operator,
+  *    not the caller, owns those blocks, so they need a release path
+  *    that leaves the caller's own caches alone, which
+  *    `spark.catalog.clearCache()` does not.
+  *
+  * [[get]] builds each key once, even under concurrent callers: the
+  * first caller runs the build outside the lock (a tree build is a
+  * multi-job Spark run, so holding the lock across it would serialize
+  * every build and block [[evict]]), later callers of the same key
+  * wait for that build, and other keys build in parallel. Every
+  * `get` first drops the entries of stopped sessions, so a long-lived
+  * JVM that cycles sessions does not pin their SparkContext graphs;
+  * only references are dropped, as a stopped context has no executors
+  * to message.
+  *
+  * [[evict]] drops one family in every session and runs its release
+  * hook: trees unpersist their checkpoint blocks and destroy the
+  * broadcast, intermediates unpersist. `Caching.release()` evicts the
+  * intermediates only, so tables, widths, merge tables and trees
+  * survive the per-query hygiene of Bench and Verify by design:
+  * derived queries measure reuse. `SparkEntry.evictTrainerMemo`
+  * evicts a family before every pass of its trainer query, so that
+  * query measures a real build.
+  *
+  * Trees keep two behaviours of their own:
+  *  - at most 4 entries, least recently used first out. Capacity
+  *    eviction drops the reference only: the tables are lineage-free,
+  *    so unpersisting would break a frame already handed to a caller,
+  *    whose handle keeps the RDDs reachable until the ContextCleaner
+  *    frees the blocks with the last one.
+  *  - a hit is served only while every checkpoint RDD reports all
+  *    partitions cached (a driver-side check, no job). Executor loss
+  *    drops blocks of a lineage-free RDD for good; a stale entry is
+  *    released and rebuilt.
+  */
+object Memo {
+
+  /** One kind of memoized value: its release hook and its stale check. */
+  sealed abstract class Family[V](private[Memo] val cap: Int = Int.MaxValue) {
+    private[Memo] def release(v: V): Unit = ()
+    private[Memo] def intact(v: V): Boolean = true
+    private[Memo] val entries =
+      new java.util.LinkedHashMap[(SparkSession, Any), V](16, 0.75f, /* accessOrder = */ true)
+  }
+
+  case object Tables extends Family[DataFrame]
+  case object ProbeWidths extends Family[Int]
+  case object BpeMerges extends Family[Seq[Row]]
+  case object Trees extends Family[BisectTree](cap = 4) {
+    override private[Memo] def release(t: BisectTree): Unit = t.release()
+    override private[Memo] def intact(t: BisectTree): Boolean = t.blocksIntact
+  }
+  case object Intermediates extends Family[DataFrame] {
+    override private[Memo] def release(df: DataFrame): Unit = { df.unpersist(blocking = false); () }
+  }
+
+  private val families: Seq[Family[_]] = Seq(Tables, ProbeWidths, BpeMerges, Trees, Intermediates)
+
+  private val inFlight = new java.util.HashMap[(Family[_], SparkSession, Any), FutureTask[Any]]()
+
+  /** The entry for `key`, built by `build` on a miss. */
+  def get[V](s: SparkSession, f: Family[V], key: Any)(build: => V): V = {
+    val k = (s, key)
+    val (hit, task, owner) = synchronized {
+      families.foreach(_.entries.keySet.removeIf(e => (e._1 ne s) && e._1.sparkContext.isStopped))
+      val h = f.entries.get(k)
+      if (h != null && f.intact(h)) (Some(h), null, false)
+      else {
+        if (h != null) { f.entries.remove(k); f.release(h) }
+        inFlight.get((f, s, key)) match {
+          case null =>
+            val t = new FutureTask[Any](() => build)
+            inFlight.put((f, s, key), t)
+            (None, t, true)
+          case running => (None, running, false)
+        }
+      }
+    }
+    hit.getOrElse {
+      if (owner) {
+        task.run()
+        synchronized {
+          inFlight.remove((f, s, key))
+          scala.util.Try(task.get()).foreach { v =>
+            f.entries.put(k, v.asInstanceOf[V])
+            if (f.entries.size > f.cap) f.entries.remove(f.entries.keySet.iterator.next())
+          }
+        }
+      }
+      try task.get().asInstanceOf[V]
+      catch { case e: ExecutionException => throw e.getCause }
+    }
+  }
+
+  /** Drop family `f` in every session, running its release hook. */
+  def evict(f: Family[_]): Unit = synchronized {
+    f.entries.values.forEach(v => f.asInstanceOf[Family[Any]].release(v))
+    f.entries.clear()
+  }
+
+  /** Entries of family `f` across sessions. */
+  def size(f: Family[_]): Int = synchronized(f.entries.size)
+}

@@ -1206,18 +1206,15 @@ object FlatTree {
   * Bit-identical to the declarative per-level loop
   * (Similarity.treeDescendDeclarative, property-pinned): the cosine
   * is dot(q, c) / sqrt(|q|²·|c|²) with [[DotProduct]]'s sequential
-  * sums, and a zero divisor follows Spark's `Divide` (NULL, or the
-  * DIVIDE_BY_ZERO error under ANSI mode, read from the session at
-  * construction as `Divide` does); a NULL query vector scores NULL.
+  * sums, and a zero divisor scores NULL in either ANSI mode, as
+  * `Similarity.cosineOf` does; a NULL query vector scores NULL.
   * The tree travels once per executor as a broadcast, so a descent
   * needs no join, window, shuffle or checkpoint per level.
   */
 case class TreeDescend(
     child: Expression,
     tree: org.apache.spark.broadcast.Broadcast[FlatTree],
-    widths: Seq[Int],
-    failOnError: Boolean =
-      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+    widths: Seq[Int])
     extends UnaryExpression {
 
   require(widths.nonEmpty && widths.forall(_ > 0) && (widths.size == 1 ||
@@ -1277,10 +1274,8 @@ case class TreeDescend(
             if (qv == null || t.centNull(c)) cNull(o) = true
             else {
               val d = java.lang.Math.sqrt(qn * t.centNorm(c))
-              if (d == 0.0) {
-                if (failOnError) throw GraftBridge.divideByZero()
-                cNull(o) = true
-              } else cSc(o) = dot(qv, t, c) / d
+              if (d == 0.0) cNull(o) = true
+              else cSc(o) = dot(qv, t, c) / d
             }
             o += 1
             c += 1

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -9,19 +10,13 @@ import org.apache.spark.storage.StorageLevel
   * mining feeding both candidate generation and verification, edge
   * lists driving iterative label propagation, …) — without the
   * persist the expensive upstream recomputes per consumer (measured
-  * 2-3× on every clustering/graph query in round 5). Those blocks are
-  * owned by the OPERATOR, not the caller, so a long-lived session
-  * composing many operators needs a release path that does not nuke
-  * the caller's own caches the way `spark.catalog.clearCache()` does.
-  *
-  * [[persistTracked]] registers every operator-persisted frame;
-  * [[release]] unpersists and forgets them all, and is safe at any
-  * point after the consuming action (Spark recomputes an unpersisted
-  * subtree if it is ever re-used). References are STRONG on purpose:
-  * a weakly-held frame that got collected could never be unpersisted,
-  * which is exactly the executor-block leak this registry exists to
-  * close — what the registry pins between releases is a few plan
-  * objects on the driver, not data.
+  * 2-3× on every clustering/graph query in round 5). The frames are
+  * held in [[graft.Memo.Intermediates]]; [[release]] unpersists and
+  * forgets them all, and is safe at any point after the consuming
+  * action (Spark recomputes an unpersisted subtree if it is ever
+  * re-used). References are STRONG on purpose: a weakly-held frame
+  * that got collected could never be unpersisted, which is exactly the
+  * executor-block leak this path exists to close.
   *
   * Bench/Verify call this between queries; library users composing
   * operators in a long-lived session call it at their own batch
@@ -29,27 +24,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object Caching {
 
-  private val tracked = new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]()
-
   /** `df.persistTracked` — MEMORY_AND_DISK persist + registration. */
   implicit final class TrackedDf(private val df: DataFrame) extends AnyVal {
-    def persistTracked: DataFrame = track(df)
-  }
-
-  def track(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    tracked.synchronized { tracked.put(df, java.lang.Boolean.TRUE); () }
-    df
+    def persistTracked: DataFrame =
+      Memo.get(df.sparkSession, Memo.Intermediates, df)(df.persist(StorageLevel.MEMORY_AND_DISK))
   }
 
   /** Unpersist every tracked operator intermediate (lazily — no job,
     * executor blocks are dropped asynchronously) and drop the refs.
+    * Every other memo family is left alone.
     */
-  def release(): Unit = tracked.synchronized {
-    tracked.keySet.forEach(df => { df.unpersist(blocking = false); () })
-    tracked.clear()
-  }
-
-  /** Number of currently tracked (live, persisted) intermediates. */
-  def trackedCount: Int = tracked.synchronized(tracked.size)
+  def release(): Unit = Memo.evict(Memo.Intermediates)
 }

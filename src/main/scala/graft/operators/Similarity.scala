@@ -68,8 +68,14 @@ object Similarity {
   /** Cosine similarity = dot / sqrt(|a|²·|b|²), computed in a fixed
     * operation order.
     */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(norm2(a) * norm2(b))
+  def cosine(a: Column, b: Column): Column = cosineOf(dot(a, b), norm2(a), norm2(b))
+
+  /** Cosine from a dot product and precomputed squared norms:
+    * dot / sqrt(na·nb), NULL for a zero divisor (a zero-norm vector)
+    * whether or not ANSI mode is on.
+    */
+  def cosineOf(dotAB: Column, na: Column, nb: Column): Column =
+    try_divide(dotAB, sqrt(na * nb))
 
   /** Exact all-pairs near-dup above a cosine threshold. O(n²) — the
     * verification baseline. Spark broadcasts the smaller side of the
@@ -85,7 +91,7 @@ object Similarity {
     val a = v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -108,7 +114,7 @@ object Similarity {
       .withColumn("cn", norm2(col("cv")))
     val scored = c.crossJoin(broadcast(q))
       .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / sqrt(col("qn") * col("cn"))).as("cosine"))
+        cosineOf(dot(col("qv"), col("cv")), col("qn"), col("cn")).as("cosine"))
     // exact top-k as a PARTIAL-AGGREGABLE aggregate (r18, guide §2.3):
     // the row_number window this replaces shuffled and sorted the full
     // |queries|×|corpus| scored pair table; the aggregate keeps at
@@ -164,7 +170,7 @@ object Similarity {
     LshObserve.counted(
         a.join(b, Seq("bucket")).where(col("id_a") < col("id_b")),
         "verify_pairs_bucketed")
-      .withColumn("cosine", dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -245,7 +251,7 @@ object Similarity {
     LshObserve.counted(cands, "verify_pairs_lsh_multi")
       .join(v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
       .join(v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -359,7 +365,7 @@ object Similarity {
     LshObserve.counted(cands, "verify_pairs_banded")
       .join(v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
       .join(v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -424,7 +430,7 @@ object Similarity {
     val withCos = cands
       .join(v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
       .join(v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
     val cntCols = thresholds.zipWithIndex.map { case (t, i) =>
       sum(when(col("cosine") >= t, 1L).otherwise(0L)).as(s"np$i")
     }
@@ -486,7 +492,7 @@ object Similarity {
     LshObserve.counted(cands, "verify_pairs_banded_inc")
       .join(nv.select(col(idCol).as("id_new"), col("v").as("va"), col("nrm").as("na")), "id_new")
       .join(cv.select(col(idCol).as("id_old"), col("v").as("vb"), col("nrm").as("nb")), "id_old")
-      .withColumn("cosine", dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("id_new"), col("id_old"), col("cosine"))
   }
@@ -820,6 +826,108 @@ object Similarity {
     (kids, out)
   }
 
+  /** A trained bisecting tree: its row table, its per-level kid tables
+    * (node, kids array<struct<child, ctv>>), and — built at the tree's
+    * first descent, never before — the kid centroids collected once
+    * into a [[graft.functions.FlatTree]] and broadcast: the value every
+    * [[graft.functions.TreeDescend]] over this tree reads. Memoized in
+    * [[graft.Memo.Trees]], which holds the broadcast with the tree.
+    */
+  private[graft] final class BisectTree(
+      val assigned: DataFrame, val levels: Seq[DataFrame]) {
+    private var flatBc: org.apache.spark.broadcast.Broadcast[FlatTree] = null
+
+    /** The broadcast flat tree; the first call collects every kid
+      * table in one job.
+      */
+    def flat: org.apache.spark.broadcast.Broadcast[FlatTree] = synchronized {
+      if (flatBc == null) {
+        flatBc = assigned.sparkSession.sparkContext.broadcast(collectFlat(levels))
+        treeFlatBuilds.incrementAndGet()
+      }
+      flatBc
+    }
+
+    private def checkpoints = (assigned +: levels)
+      .flatMap(df => org.apache.spark.sql.GraftBridge.checkpointRdds(df))
+
+    /** Free the checkpoint blocks now (async), not at the next GC
+      * cycle, and destroy the broadcast, if built.
+      */
+    def release(): Unit = synchronized {
+      try checkpoints.foreach(_.unpersist(blocking = false))
+      catch { case _: Throwable => () }
+      if (flatBc != null) {
+        try flatBc.destroy() catch { case _: Throwable => () }
+        flatBc = null
+      }
+    }
+
+    /** Every checkpoint RDD still reports all partitions cached. */
+    def blocksIntact: Boolean =
+      try {
+        val info = assigned.sparkSession.sparkContext.getRDDStorageInfo
+        checkpoints.forall(r => info.find(_.id == r.id)
+          .exists(i => i.numCachedPartitions == i.numPartitions))
+      } catch { case _: Throwable => false }
+  }
+
+  /** Every level's kid table in one collect, as a [[FlatTree]]. */
+  private[graft] def collectFlat(levels: Seq[DataFrame]): FlatTree =
+    if (levels.isEmpty) FlatTree(Nil)
+    else {
+      val rows = levels.zipWithIndex
+        .map { case (k, l) => k.select(lit(l).as("lvl"), col("node"), col("kids")) }
+        .reduce(_.unionByName(_))
+        .collect()
+        .groupBy(_.getInt(0))
+      FlatTree(levels.indices.map(l => rows.getOrElse(l, Array.empty).toSeq.map { r =>
+        (r.getLong(1), r.getSeq[org.apache.spark.sql.Row](2).map { kk =>
+          (kk.getAs[Int]("child"),
+            Option(kk.getAs[scala.collection.Seq[Double]]("ctv")).map(_.toArray).orNull)
+        }.toSeq)
+      }))
+    }
+
+  /** Flat-tree broadcasts this JVM has built (spec instrument: proves
+    * one broadcast per memoized tree, not one per call).
+    */
+  private[graft] val treeFlatBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Fresh bisecting-tree builds this JVM has run (spec instrument:
+    * proves the memo path skips the build).
+    */
+  private[graft] val treeBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** [[bisectAssigned]] through the [[graft.Memo.Trees]] memo: one
+    * build per (session, corpus plan, params), hash-identical to a
+    * fresh build (spec-pinned).
+    */
+  private[graft] def bisectAssignedCached(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nCells: Int,
+      iters: Int,
+      targetRows: Int = 0,
+      slack: Int = 4): BisectTree = {
+    // key = canonicalized-plan string + semanticHash: the string
+    // alone elides wide field lists past
+    // spark.sql.debug.maxToStringFields (a theoretical cross-corpus
+    // collision, ADVICE r16); a collision now needs both the elided
+    // string AND the full-plan semantic hash to agree
+    val plan = corpus.select(col(idCol), col(vecCol)).queryExecution.analyzed
+    val planKey =
+      s"${plan.semanticHash()}:${plan.canonicalized.toString}"
+    graft.Memo.get(corpus.sparkSession, graft.Memo.Trees,
+        (planKey, nCells, iters, targetRows, slack)) {
+      treeBuilds.incrementAndGet()
+      val (assigned, levels) =
+        bisectAssigned(corpus, idCol, vecCol, nCells, iters, targetRows, slack)
+      new BisectTree(assigned, levels)
+    }
+  }
+
   /** Log-depth bisecting k-means: every vector descends ⌈log₂ nCells⌉
     * deterministic 2-way splits ([[splitLevel]]; node ids follow the
     * heap rule child = 2·node + {0,1}), then — when `targetRows` > 0
@@ -861,238 +969,6 @@ object Similarity {
     *         ([[knnJoinIvf]]'s beam) reads, passing through nodes a
     *         level did not split)
     */
-  /** Bisecting-tree memo per (session, corpus plan, params) — the
-    * bpeMergesCached train-once pattern applied to the tree: five
-    * graded queries (semdedup_prune / _rate_curve / _fidelity_eval,
-    * knn_recall_eval / _recall_curve / knn_join_ivf + its
-    * calibration descent) used to re-train the IDENTICAL size-guarded
-    * tree over the same corpus — ~17% of the whole sf0.1 bench was
-    * that retrain-by-design mass (r15 verdict #3). The tree's row
-    * table and per-level kid tables are already localCheckpoint'ed
-    * RDDs (lineage-free, MEMORY_AND_DISK, executor-side — NOT a
-    * driver collect), so holding the DataFrame handles makes reuse
-    * exact: later callers read the same materialized blocks.
-    * Catalog clearCache()/Caching.release() don't touch RDD-level
-    * checkpoint blocks, so the memo survives Bench's inter-query
-    * hygiene by construction. The key's corpus component is the
-    * CANONICALIZED analyzed plan string (value equality, no hash
-    * collisions); stopped sessions are evicted by the same pass that
-    * purges the other per-session memos. Outputs are hash-identical
-    * to a fresh build (spec-pinned); Bench and RunOne evict before
-    * every pass of each family's designated TRAINER query
-    * (`SparkEntry.evictTrainerMemo`) so they still measure a real
-    * tree build.
-    */
-  private type TreeKey =
-    (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int)
-  private type TreeVal = BisectTree
-
-  /** A trained bisecting tree: its row table, its per-level kid tables
-    * (node, kids array<struct<child, ctv>>), and — built at the tree's
-    * first descent, never before — the kid centroids collected once
-    * into a [[graft.functions.FlatTree]] and broadcast: the value every
-    * [[graft.functions.TreeDescend]] over this tree reads. The memo
-    * entry holds the broadcast, so a memoized tree is collected and
-    * shipped once, however many queries descend it.
-    */
-  private[graft] final class BisectTree(
-      val assigned: DataFrame, val levels: Seq[DataFrame]) {
-    private var flatBc: org.apache.spark.broadcast.Broadcast[FlatTree] = null
-
-    /** The broadcast flat tree; the first call collects every kid
-      * table in one job.
-      */
-    def flat: org.apache.spark.broadcast.Broadcast[FlatTree] = synchronized {
-      if (flatBc == null) {
-        flatBc = assigned.sparkSession.sparkContext.broadcast(collectFlat(levels))
-        treeFlatBuilds.incrementAndGet()
-      }
-      flatBc
-    }
-
-    /** Destroy the broadcast, if built (the eviction paths). */
-    def destroyFlat(): Unit = synchronized {
-      if (flatBc != null) {
-        try flatBc.destroy() catch { case _: Throwable => () }
-        flatBc = null
-      }
-    }
-  }
-
-  /** Every level's kid table in one collect, as a [[FlatTree]]. */
-  private[graft] def collectFlat(levels: Seq[DataFrame]): FlatTree =
-    if (levels.isEmpty) FlatTree(Nil)
-    else {
-      val rows = levels.zipWithIndex
-        .map { case (k, l) => k.select(lit(l).as("lvl"), col("node"), col("kids")) }
-        .reduce(_.unionByName(_))
-        .collect()
-        .groupBy(_.getInt(0))
-      FlatTree(levels.indices.map(l => rows.getOrElse(l, Array.empty).toSeq.map { r =>
-        (r.getLong(1), r.getSeq[org.apache.spark.sql.Row](2).map { kk =>
-          (kk.getAs[Int]("child"),
-            Option(kk.getAs[scala.collection.Seq[Double]]("ctv")).map(_.toArray).orNull)
-        }.toSeq)
-      }))
-    }
-
-  /** Flat-tree broadcasts this JVM has built (spec instrument: proves
-    * one broadcast per memoized tree, not one per call).
-    */
-  private[graft] val treeFlatBuilds = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Memo bound: a handful of (corpus, params) trees per JVM. The
-    * entries pin lineage-free localCheckpoint blocks (MEMORY_AND_DISK,
-    * executor-side) that `Caching.release()` deliberately cannot
-    * touch, so an UNBOUNDED memo in a long-lived library session
-    * iterating many corpora/params would accumulate pinned executor
-    * storage until GC happened to collect the dropped handles
-    * (ADVICE r16). Access-ordered LRU. Capacity eviction DROPS THE
-    * REFERENCES ONLY (no eager unpersist — ADVICE r17): these RDDs
-    * are lineage-free, so a DataFrame previously returned to a
-    * caller still referencing the evicted tree (a long-lived session
-    * interleaving >4 (corpus, params) configs, or a concurrent
-    * consumer) would otherwise fail its next action on missing
-    * blocks instead of recomputing. The caller's own DataFrame holds
-    * the RDD reachable, so the ContextCleaner frees the blocks
-    * exactly when the LAST handle goes — the memo stays bounded in
-    * entry count, storage is released at true end-of-life, and no
-    * live handle is ever invalidated. Eager unpersist remains only
-    * on the two paths where it is safe or explicitly requested:
-    * stale entries (blocks already lost — any outstanding handle is
-    * broken regardless) and [[evictTreeMemo]] (Bench trainer-pass
-    * hygiene; documented: don't hold tree-derived frames across it).
-    */
-  private val treeCacheCap = 4
-
-  private val treeCache = new java.util.LinkedHashMap[TreeKey, TreeVal](
-    16, 0.75f, /* accessOrder = */ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[TreeKey, TreeVal]): Boolean = size > treeCacheCap
-  }
-
-  /** Explicitly free a memoized tree's checkpoint blocks: every
-    * LogicalRDD leaf under the row table and the per-level kid tables
-    * is a materialized localCheckpoint RDD — unpersist them directly
-    * (async) so eviction returns executor storage NOW, not at the
-    * next GC cycle — and destroy its flat-tree broadcast.
-    */
-  private def unpersistTree(v: TreeVal): Unit = {
-    (v.assigned +: v.levels).foreach { df =>
-      try org.apache.spark.sql.GraftBridge.checkpointRdds(df)
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-    }
-    v.destroyFlat()
-  }
-
-  /** Driver-side memo-hit validation (no job): every checkpoint RDD
-    * must still report ALL partitions cached. On a real cluster an
-    * executor loss drops blocks of a LINEAGE-FREE checkpointed RDD
-    * unrecoverably — a memoized tree would then fail every later
-    * query where a fresh build would have recovered (ADVICE r16).
-    * A stale entry is evicted and rebuilt once instead.
-    */
-  private def treeBlocksIntact(v: TreeVal): Boolean =
-    try {
-      val sc = v.assigned.sparkSession.sparkContext
-      val info = sc.getRDDStorageInfo
-      (v.assigned +: v.levels)
-        .flatMap(df => org.apache.spark.sql.GraftBridge.checkpointRdds(df))
-        .forall { r =>
-          info.find(_.id == r.id)
-            .exists(i => i.numCachedPartitions == i.numPartitions)
-        }
-    } catch { case _: Throwable => false }
-
-  /** Fresh bisecting-tree builds this JVM has run (spec instrument:
-    * proves the memo path skips the build).
-    */
-  private[graft] val treeBuilds = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Drop every memoized tree (Bench trainer-pass hygiene), freeing
-    * the checkpoint blocks explicitly.
-    */
-  def evictTreeMemo(): Unit = treeCache.synchronized {
-    treeCache.values.forEach(v => unpersistTree(v))
-    treeCache.clear()
-  }
-
-  /** Drop trees owned by stopped sessions (long-lived-JVM hygiene —
-    * a stopped session's entries would pin its SparkContext graph).
-    * Block unpersist and broadcast destroy are skipped: a stopped
-    * context has no executors to message, dropping the references is
-    * all there is to do.
-    */
-  def evictTreeMemoForStopped(live: org.apache.spark.sql.SparkSession): Unit =
-    treeCache.synchronized {
-      treeCache.keySet.removeIf(k => (k._1 ne live) && k._1.sparkContext.isStopped)
-      ()
-    }
-
-  /** Per-key in-flight builds: concurrent callers of the SAME
-    * (corpus, params) share one build; different keys build in
-    * parallel. The global `treeCache` monitor is held only for
-    * lookup/install — never across `fresh()`, a full multi-job Spark
-    * tree build that would otherwise serialize all concurrent builds
-    * and block evictTreeMemo for its whole duration (ADVICE r17).
-    */
-  private val treeInFlight = new java.util.concurrent.ConcurrentHashMap[
-    TreeKey, java.util.concurrent.FutureTask[TreeVal]]()
-
-  private[graft] def bisectAssignedCached(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nCells: Int,
-      iters: Int,
-      targetRows: Int = 0,
-      slack: Int = 4): BisectTree = {
-    def fresh() = {
-      treeBuilds.incrementAndGet()
-      val (assigned, levels) =
-        bisectAssigned(corpus, idCol, vecCol, nCells, iters, targetRows, slack)
-      new BisectTree(assigned, levels)
-    }
-    val s = corpus.sparkSession
-    evictTreeMemoForStopped(s)
-    // key = canonicalized-plan string + semanticHash: the string
-    // alone elides wide field lists past
-    // spark.sql.debug.maxToStringFields (a theoretical cross-corpus
-    // collision, ADVICE r16); a collision now needs both the elided
-    // string AND the full-plan semantic hash to agree
-    val plan = corpus.select(col(idCol), col(vecCol)).queryExecution.analyzed
-    val planKey =
-      s"${plan.semanticHash()}:${plan.canonicalized.toString}"
-    val key: TreeKey = (s, planKey, nCells, iters, targetRows, slack)
-    // fast path: memo hit under the (briefly held) monitor; a stale
-    // entry (blocks lost to executor failure) is evicted — its
-    // remaining blocks freed eagerly, since every outstanding
-    // handle is already broken — and rebuilt below
-    val hit = treeCache.synchronized {
-      val h = treeCache.get(key)
-      if (h != null && treeBlocksIntact(h)) h
-      else {
-        if (h != null) { treeCache.remove(key); unpersistTree(h) }
-        null
-      }
-    }
-    if (hit != null) hit
-    else {
-      val task = new java.util.concurrent.FutureTask[TreeVal](
-        () => fresh())
-      val prior = treeInFlight.putIfAbsent(key, task)
-      if (prior != null) prior.get() // share the concurrent build
-      else
-        try {
-          task.run() // OUTSIDE the monitor: builds don't serialize
-          val v = task.get()
-          treeCache.synchronized { treeCache.put(key, v); () }
-          v
-        } finally { treeInFlight.remove(key); () }
-    }
-  }
-
   private def bisectAssigned(
       corpus: DataFrame,
       idCol: String,

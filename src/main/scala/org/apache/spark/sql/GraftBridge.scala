@@ -23,10 +23,4 @@ object GraftBridge {
     df.queryExecution.analyzed.collect {
       case l: execution.LogicalRDD => l.rdd
     }
-
-  /** Spark's DIVIDE_BY_ZERO error, as an ANSI-mode `Divide` raises it
-    * (for kernels that replay a Column-form division bit for bit).
-    */
-  def divideByZero(): ArithmeticException =
-    errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -15,13 +15,13 @@ class CachingSpec extends SparkSpec {
     try {
       mine.count(); user.count()
       assert(mine.storageLevel != StorageLevel.NONE)
-      assert(Caching.trackedCount >= 1)
+      assert(Memo.size(Memo.Intermediates) >= 1)
       Caching.release()
       assert(mine.storageLevel == StorageLevel.NONE,
         "tracked frame still persisted after release()")
       assert(user.storageLevel != StorageLevel.NONE,
         "release() must not touch caller-owned caches")
-      assert(Caching.trackedCount == 0)
+      assert(Memo.size(Memo.Intermediates) == 0)
     } finally user.unpersist(blocking = false)
   }
 
@@ -29,9 +29,9 @@ class CachingSpec extends SparkSpec {
     Caching.release()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
     Dedup.minHashNearDups(docs, "doc_id", "text", 0.8).count()
-    assert(Caching.trackedCount >= 1,
+    assert(Memo.size(Memo.Intermediates) >= 1,
       "minHashNearDups persisted nothing through the tracked path")
     Caching.release()
-    assert(Caching.trackedCount == 0)
+    assert(Memo.size(Memo.Intermediates) == 0)
   }
 }

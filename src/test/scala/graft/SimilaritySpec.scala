@@ -420,7 +420,7 @@ class SimilaritySpec extends SparkSpec {
     def run() = Similarity.semDedup(emb, "vec_id", "embedding",
       nCells = 8, iters = 1, eps = 0.4, targetRows = 16)
       .collect().map(_.toString).sorted.toSeq
-    Similarity.evictTreeMemo()
+    Memo.evict(Memo.Trees)
     val b0 = Similarity.treeBuilds.get()
     val first = run()
     assert(Similarity.treeBuilds.get() == b0 + 1, "first run trains the tree")
@@ -428,7 +428,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.treeBuilds.get() == b0 + 1,
       "second run must reuse the memoized tree, not retrain")
     assert(second == first, "memoized outputs must be hash-identical")
-    Similarity.evictTreeMemo()
+    Memo.evict(Memo.Trees)
     val freshAgain = run()
     assert(Similarity.treeBuilds.get() == b0 + 2)
     assert(freshAgain == first, "fresh rebuild must be hash-identical too")
@@ -441,7 +441,7 @@ class SimilaritySpec extends SparkSpec {
     run()
     assert(Similarity.treeBuilds.get() == b0 + 4,
       "the trainer hook must force a fresh build on every run")
-    Similarity.evictTreeMemo()
+    Memo.evict(Memo.Trees)
     // the flat-tree broadcast every descent reads: built at a memoized
     // tree's first descent, shared by later descents, destroyed with
     // the entry (explicit eviction and the stale-entry path)
@@ -458,9 +458,9 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.treeFlatBuilds.get() == f0 + 1,
       "second run must reuse the memoized tree's broadcast")
     val bc = tree().flat
-    Similarity.evictTreeMemo()
+    Memo.evict(Memo.Trees)
     assert(intercept[Exception](bc.value).getMessage.contains("destroyed"),
-      "evictTreeMemo must destroy the broadcast")
+      "evict(Trees) must destroy the broadcast")
     assert(curve() == c1, "rebuilt tree and broadcast must be hash-identical")
     assert(Similarity.treeFlatBuilds.get() == f0 + 2,
       "after eviction the next run builds a new broadcast")
@@ -474,7 +474,25 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.treeBuilds.get() == t1 + 1, "a stale entry must be rebuilt")
     assert(intercept[Exception](staleBc.value).getMessage.contains("destroyed"),
       "the stale-entry path must destroy the broadcast")
-    Similarity.evictTreeMemo()
+    Memo.evict(Memo.Trees)
+  }
+
+  test("an all-zero vector scores a NULL cosine in knnJoinIvf and semDedup under ANSI mode") {
+    // Spark 4's default ANSI mode raised DIVIDE_BY_ZERO on the zero
+    // norm, failing the whole query; the zero row now scores NULL
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val withZero = semVecs.union(Seq((7L, Array(0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding"))
+    val knn = Similarity.knnJoinIvf(withZero, withZero, "vec_id", "embedding",
+      k = 2, nCells = 2, nProbe = 1, iters = 0).collect()
+    val zeroQuery = knn.filter(_.getLong(0) == 7L)
+    assert(zeroQuery.nonEmpty && zeroQuery.forall(_.isNullAt(3)),
+      s"zero query rows: ${zeroQuery.toSeq}")
+    assert(knn.filter(_.getLong(0) != 7L).forall(r => r.isNullAt(3) == (r.getLong(2) == 7L)),
+      "only pairs with the zero vector score NULL")
+    val sem = Similarity.semDedup(withZero, "vec_id", "embedding",
+      nCells = 2, iters = 0, eps = 0.99).collect().map(r => r.getLong(0) -> r).toMap
+    assert(sem.size == 7 && sem(7L).isNullAt(2) && sem(7L).getBoolean(3),
+      s"semDedup rows: ${sem.values.toSeq}")
   }
 
   test("semDedup keeps everything when eps exceeds every intra-cell cosine") {

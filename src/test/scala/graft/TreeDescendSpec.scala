@@ -132,20 +132,16 @@ class TreeDescendSpec extends SparkSpec {
     }
   }
 
-  test("TreeDescend raises ANSI DIVIDE_BY_ZERO where the declarative descent does") {
+  test("TreeDescend and the declarative descent score a zero divisor NULL under ANSI") {
     withAnsi(on = true) {
       val levels = Seq(levelDf(Seq(1L -> Seq(0 -> Array(1.0, 0.0, 0.0),
         1 -> Array(0.0, 1.0, 0.0)))))
       val queries = queryDf(Seq(0L -> Array(1.0, 1.0, 0.0), 1L -> Array(0.0, 0.0, 0.0)))
-      def err(df: => DataFrame): String =
-        intercept[Exception](df.collect()).getMessage
-      assert(err(Similarity.treeDescendDeclarative(queries, levels, Seq(1)))
-        .contains("DIVIDE_BY_ZERO"))
-      assert(err(compiled(queries, levels, Seq(1))).contains("DIVIDE_BY_ZERO"))
-      // without the zero vector both paths agree row for row
-      val ok = queries.where(col("query_id") === 0)
-      assert(rows(compiled(ok, levels, Seq(1))) ==
-        rows(Similarity.treeDescendDeclarative(ok, levels, Seq(1))))
+      val want = rows(Similarity.treeDescendDeclarative(queries, levels, Seq(1)))
+      assert(want.filter(_._1 == 1L).map(_._3) == Set(None),
+        "the zero query must score NULL on the declarative path")
+      assert(rows(compiled(queries, levels, Seq(1))) == want,
+        "both paths must agree row for row, the zero query included")
     }
   }
 
