@@ -3,11 +3,17 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Reference-parity throughput measurement: the EXACT pipeline shape
-  * of the reference's own performance_test.py — 1M integers through
+  * of the reference's own performance_test.py — integers through
   * filter(even) → map(×2) → filter(>100) → map(+1) — timed median-of-N
   * after warmup, on one core (apples-to-apples with the reference's
   * single-process sequential strategy) and on all cores (the scale-out
   * the reference's thread/process strategies approximate).
+  *
+  * The default is 400 M rows, not the reference's 1 M: a 1 M-row pass
+  * is ~0.15 s of fixed job overhead on one core or four alike, so its
+  * rows/s measured scheduling, not the chain. At 400 M rows on four
+  * cores each leg is bound by throughput (the all-core leg runs ~3.4×
+  * the one-core leg).
   *
   * The reference side of this number comes from running the SAME chain
   * through laygo's Pipeline.to_list() (a PEP-695-syntax-stripped copy
@@ -19,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object BaselineChain {
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(1000000L)
+    val n = args.headOption.map(_.toLong).getOrElse(400000000L)
     val reps = 10
     Seq(1, GraftSession.cpus).foreach { cores =>
       val spark = GraftSession.local(cores)

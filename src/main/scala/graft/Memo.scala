@@ -2,8 +2,12 @@ package graft
 
 import java.util.concurrent.{ExecutionException, FutureTask}
 
+import scala.util.hashing.MurmurHash3
+
 import graft.operators.Similarity.BisectTree
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 
 /** The work graft reuses across the queries of one session, in one
   * place. Every entry is keyed by (session, family, key), and the
@@ -30,6 +34,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    not the caller, owns those blocks, so they need a release path
   *    that leaves the caller's own caches alone, which
   *    `spark.catalog.clearCache()` does not.
+  *  - [[Rows]]: the row count per frame ([[rows]]; keyed by
+  *    [[planKey]], like trees), the one input of the self-scaling size
+  *    rules (`Similarity.cellsPlan`, `Similarity.lshPlanBits`,
+  *    `Multimodal.nearDupKeysPlan`). The first query of a session over
+  *    a (table, filter) pays the count; later builds plan with no job.
   *
   * [[get]] builds each key once, even under concurrent callers: the
   * first caller runs the build outside the lock (a tree build is a
@@ -81,8 +90,31 @@ object Memo {
   case object Intermediates extends Family[DataFrame] {
     override private[Memo] def release(df: DataFrame): Unit = { df.unpersist(blocking = false); () }
   }
+  case object Rows extends Family[Long]
 
-  private val families: Seq[Family[_]] = Seq(Tables, ProbeWidths, BpeMerges, Trees, Intermediates)
+  private val families: Seq[Family[_]] =
+    Seq(Tables, ProbeWidths, BpeMerges, Trees, Intermediates, Rows)
+
+  /** `df`'s memo key: its canonicalized analyzed plan, the plan's
+    * semantic hash (the string elides wide field lists) and a hash of
+    * every listed file's path, length and modification time. File
+    * indexes compare equal by root path alone, so without the listing
+    * a fresh read of a rewritten path would hit the old read's entry.
+    */
+  private[graft] def planKey(df: DataFrame): String = {
+    val plan = df.queryExecution.analyzed
+    val files = plan.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
+    }.flatMap {
+      case idx: PartitioningAwareFileIndex =>
+        idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      case idx => idx.inputFiles.toSeq
+    }
+    s"${plan.semanticHash()}:${plan.canonicalized}:${MurmurHash3.unorderedHash(files)}"
+  }
+
+  /** `df`'s row count, counted once per (session, [[planKey]]). */
+  def rows(df: DataFrame): Long = get(df.sparkSession, Rows, planKey(df))(df.count())
 
   private val inFlight = new java.util.HashMap[(Family[_], SparkSession, Any), FutureTask[Any]]()
 

@@ -3,7 +3,11 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** Dev profiler: time, profile and optionally explain registered
   * queries in one JVM.
@@ -16,9 +20,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * predicts the per-query number in bench.json. Repetitions clear the
   * cache between runs (like Bench does between queries) so the
   * steady-state rep isolates query cost from JIT/classload warmup.
-  * Every rep prints each Spark job's wall time, stage count and call
-  * sites — where a multi-level plan spends its fixed overhead (job
-  * scheduling, checkpoint materialization, broadcast builds).
+  * Every rep prints each Spark job's wall time, stage count and the
+  * action behind it (the SQL execution's description, e.g. `count at
+  * SparkEntry.scala:833`; a job outside any SQL execution prints its
+  * stages' call sites and task counts) — where a multi-level plan
+  * spends its fixed overhead (job scheduling, checkpoint
+  * materialization, broadcast builds).
   *
   * `--explain plans/r20/before` writes each query's formatted plan,
   * line-capped like graft.Plans, to `plans/r20/<query>_before.txt`
@@ -46,10 +53,22 @@ object RunOne {
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     sc.addSparkListener(new SparkListener {
       private val starts = scala.collection.mutable.Map[Int, (Long, String)]()
+      // the action behind each running SQL execution (`count at
+      // SparkEntry.scala:833`): under AQE a job's own call site is the
+      // stage-materialization thread's, the same for every job
+      private val actions = scala.collection.mutable.Map[Long, String]()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => actions(x.executionId) = x.description
+        case x: SparkListenerSQLExecutionEnd => actions.remove(x.executionId)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = js.stageInfos
+        val action = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => actions.get(id.toLong))
+        val site = action.getOrElse(js.stageInfos
           .map(si => s"${si.name.takeWhile(_ != '\n').take(60)}/${si.numTasks}")
-          .mkString(" | ")
+          .mkString(" | "))
         starts(js.jobId) = (js.time, s"stages=${js.stageInfos.size} $site")
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =

@@ -68,7 +68,7 @@ object SparkEntry {
       concat(col("text"), lit(" café münchen 東京 "),
         (col("doc_id") % 7).cast("string")).as("mtext"))
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Memo.get(s, Memo.Tables, s"$dir/$name.parquet") {
       val raw = s.read.parquet(s"$dir/$name.parquet")
       // drift insurance (the round-7 events-encoding lesson): the
@@ -656,8 +656,9 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val textPairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.6)
         .select(col("id_a"), col("id_b"))
+      val emb = t(s, dir, "embeddings")
       val vecPairs = Similarity.nearDupCosineBanded(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
+        emb, "vec_id", "embedding", 0.4, Memo.rows(emb))
         .select(col("id_a"), col("id_b"))
       Dedup.clusters(textPairs.unionByName(vecPairs), docs, "doc_id")
         .select(col("id").as("doc_id"), col("cluster"))
@@ -672,8 +673,9 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val textPairs = Dedup.minHashNearDups(docs, "doc_id", "text", 0.6)
         .select(col("id_a"), col("id_b"))
+      val emb = t(s, dir, "embeddings")
       val vecPairs = Similarity.nearDupCosineBanded(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
+        emb, "vec_id", "embedding", 0.4, Memo.rows(emb))
         .select(col("id_a"), col("id_b"))
       Dedup.clusters(textPairs.unionByName(vecPairs), docs, "doc_id")
         .select(col("id").as("doc_id"), col("cluster"))
@@ -728,10 +730,11 @@ object SparkEntry {
     // the exact candidate set is verified; lsh_recall_eval_deployed
     // measures recall at this exact operating point. The O(n²) exact
     // variant (nearDupCosineExact) is a spec-only verification tool.
-    "neardup_cosine_bucketed" -> ((s, dir) =>
-      Similarity.nearDupCosineBanded(t(s, dir, "embeddings"), "vec_id", "embedding",
-        0.4)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))),
+    "neardup_cosine_bucketed" -> ((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      Similarity.nearDupCosineBanded(emb, "vec_id", "embedding", 0.4, Memo.rows(emb))
+        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+    }),
 
     // the threshold OPERATING CURVE for the banded channel — candidate
     // + verified-pair mass at each threshold from ONE pair join (the
@@ -756,9 +759,10 @@ object SparkEntry {
     // follow the CORPUS size, the side that grows
     "neardup_cosine_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
+      val corpus = emb.where(col("vec_id") % 10 =!= 0)
       Similarity.nearDupCosineBandedIncremental(
-        emb.where(col("vec_id") % 10 === 0), emb.where(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", 0.4)
+        emb.where(col("vec_id") % 10 === 0), corpus,
+        "vec_id", "embedding", 0.4, Memo.rows(corpus))
         .select(col("id_new"), col("id_old"), round(col("cosine"), 6).as("cosine"))
     }),
 
@@ -830,7 +834,7 @@ object SparkEntry {
     "semdedup_prune" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.semDedup(emb, "vec_id", "embedding",
-        nCells = Similarity.cellsPlan(emb.count(), 64), iters = 1, eps = 0.4,
+        nCells = Similarity.cellsPlan(Memo.rows(emb), 64), iters = 1, eps = 0.4,
         targetRows = 64)
         .select(col("vec_id"), col("cell_id").cast("long").as("cell_id"),
           col("cent_cos_micro"), col("kept"))
@@ -856,14 +860,14 @@ object SparkEntry {
     "semdedup_rate_curve" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.semDedupRateCurve(emb, "vec_id", "embedding",
-        nCells = Similarity.cellsPlan(emb.count(), 64), iters = 1,
+        nCells = Similarity.cellsPlan(Memo.rows(emb), 64), iters = 1,
         epss = Seq(0.2, 0.3, 0.4, 0.5, 0.6), targetRows = 64)
     }),
 
     "semdedup_fidelity_eval" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.semDedupFidelityEval(emb, "vec_id", "embedding",
-        nCells = Similarity.cellsPlan(emb.count(), 64), iters = 1, eps = 0.4,
+        nCells = Similarity.cellsPlan(Memo.rows(emb), 64), iters = 1, eps = 0.4,
         targetRows = 64)
     }),
 
@@ -879,7 +883,7 @@ object SparkEntry {
       Similarity.knnJoinRecallEval(
         emb.where(col("vec_id") % 2 === 0), corpus,
         "vec_id", "embedding", k = 3,
-        nCells = Similarity.cellsPlan(corpus.count(), 64), nProbe = 2,
+        nCells = Similarity.cellsPlan(Memo.rows(corpus), 64), nProbe = 2,
         iters = 1, sampleMod = 1, targetRows = 64)
     }),
 
@@ -894,7 +898,7 @@ object SparkEntry {
       Similarity.knnJoinRecallCurve(
         emb.where(col("vec_id") % 2 === 0), corpus,
         "vec_id", "embedding", k = 3,
-        nCells = Similarity.cellsPlan(corpus.count(), 64),
+        nCells = Similarity.cellsPlan(Memo.rows(corpus), 64),
         nProbes = Seq(2, 4, 8, 16), iters = 1, sampleMod = 1, targetRows = 64)
     }),
 
@@ -912,7 +916,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(col("vec_id") % 2 === 1)
       val queries = emb.where(col("vec_id") % 2 === 0)
-      val nCells = Similarity.cellsPlan(corpus.count(), 64)
+      val nCells = Similarity.cellsPlan(Memo.rows(corpus), 64)
       // calibrate ONCE per (session, corpus) — the production shape:
       // the measured curve is a deployment decision, not a per-query
       // tax; repeated runs (bench passes, retries) reuse the width
@@ -937,7 +941,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(col("vec_id") % 2 === 1)
       val batch = emb.where(col("vec_id") % 2 === 0)
-      val nCells = Similarity.cellsPlan(corpus.count(), 64)
+      val nCells = Similarity.cellsPlan(Memo.rows(corpus), 64)
       Similarity.assignIncremental(batch, corpus, "vec_id", "embedding",
         nCells, iters = 1, targetRows = 64)
     }),
@@ -953,7 +957,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(col("vec_id") % 2 === 1)
       val batch = emb.where(col("vec_id") % 2 === 0)
-      val nCells = Similarity.cellsPlan(corpus.count(), 64)
+      val nCells = Similarity.cellsPlan(Memo.rows(corpus), 64)
       Similarity.annIvfDrift(batch, corpus, "vec_id", "embedding",
         nCells, iters = 1, targetRows = 64)
     }),
@@ -968,7 +972,7 @@ object SparkEntry {
     "stream_ann_assign" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(col("vec_id") % 2 === 1)
-      val nCells = Similarity.cellsPlan(corpus.count(), 64)
+      val nCells = Similarity.cellsPlan(Memo.rows(corpus), 64)
       // stream with the FILE's schema (array<float> or a replica's
       // array<double> — t()'s normalized schema could mismatch the
       // physical type); assignIncrementalStream casts to double itself
@@ -1141,7 +1145,7 @@ object SparkEntry {
       Dedup.hashNearDups(
         Multimodal.imageDHash(
           Multimodal.syntheticNearDupImages(docs, "doc_id",
-            Multimodal.nearDupKeysPlan(docs.count())),
+            Multimodal.nearDupKeysPlan(Memo.rows(docs))),
           "doc_id", "img"),
         "doc_id", "dhash", 3)
     }),
@@ -1156,7 +1160,7 @@ object SparkEntry {
     // cannot count its own corpus)
     "stream_phash_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val nKeys = Multimodal.nearDupKeysPlan(docs.count())
+      val nKeys = Multimodal.nearDupKeysPlan(Memo.rows(docs))
       val corpus = Multimodal.imageDHash(
         Multimodal.syntheticNearDupImages(
           docs.where(pmod(col("doc_id"), lit(10)) =!= 0), "doc_id", nKeys),
@@ -1187,7 +1191,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val hashed = Multimodal.imageDHash(
         Multimodal.syntheticNearDupImages(docs, "doc_id",
-          Multimodal.nearDupKeysPlan(docs.count())),
+          Multimodal.nearDupKeysPlan(Memo.rows(docs))),
         "doc_id", "img").persistTracked
       Dedup.hashNearDupsIncremental(
         hashed.where(pmod(col("doc_id"), lit(10)) === 0),
@@ -1299,7 +1303,7 @@ object SparkEntry {
     // collide at Hamming 0, perturbed ones at ≤ 2.
     "audio_fingerprint_neardup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val nKeys = Multimodal.nearDupKeysPlan(docs.count())
+      val nKeys = Multimodal.nearDupKeysPlan(Memo.rows(docs))
       Pipeline(Multimodal.syntheticNearDupAudio(docs, "doc_id", nKeys))
         .apply { clips =>
           Multimodal.audioFingerprint(clips, "doc_id", "clip").persistTracked
@@ -1319,7 +1323,7 @@ object SparkEntry {
     // their unpadded-PCM twins via the same banded join.
     "audio_fingerprint_padded" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val nKeys = Multimodal.nearDupKeysPlan(docs.count())
+      val nKeys = Multimodal.nearDupKeysPlan(Memo.rows(docs))
       Pipeline(Multimodal.syntheticNearDupAudioPadded(docs, "doc_id", nKeys))
         .apply { clips =>
           Multimodal.audioFingerprintTrimmed(clips, "doc_id", "clip")
@@ -2600,7 +2604,7 @@ object SparkEntry {
     // replays the identical bucketing and the result is hash-checked
     "neardup_cosine_lsh" -> ((s, dir) =>
       Similarity.nearDupCosineLsh(t(s, dir, "embeddings"), "vec_id", "embedding",
-        0.4, dims = 64, nBits = 8)
+        0.4, nBits = 8)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))),
 
     // measured recall of the production LSH near-dup: exact ground
@@ -2609,7 +2613,7 @@ object SparkEntry {
     // LSH side is the deployed full-corpus operator
     "lsh_recall_eval" -> ((s, dir) =>
       Similarity.lshRecallEval(t(s, dir, "embeddings"), "vec_id", "embedding",
-        0.4, dims = 64, nBits = 8, sampleMod = 2)),
+        0.4, nBits = 8, sampleMod = 2)),
 
     // contrastive triplets: nearest-neighbor positives + Lehmer-hash
     // deterministic negatives (row-local keep test sizes the pool, so
@@ -2634,9 +2638,9 @@ object SparkEntry {
     // operator is the deployed path)
     "neardup_cosine_lsh_multi" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val bits = math.min(Similarity.lshPlanBits(emb.count(), 64), 16)
+      val bits = math.min(Similarity.lshPlanBits(Memo.rows(emb), 64), 16)
       Similarity.nearDupCosineLshMulti(emb, "vec_id", "embedding",
-        0.4, dims = 64, nBits = bits, nTables = 3)
+        0.4, nBits = bits, nTables = 3)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
     }),
 
@@ -2716,7 +2720,7 @@ object SparkEntry {
     // recursive connected components, and the Lehmer split closed-form
     "curation_image_e2e" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val nKeys = Multimodal.nearDupKeysPlan(docs.count())
+      val nKeys = Multimodal.nearDupKeysPlan(Memo.rows(docs))
       Pipeline(Multimodal.syntheticNearDupImages(docs, "doc_id", nKeys))
         .apply { imgs0 =>
           val imgs = imgs0.persistTracked

@@ -77,21 +77,36 @@ object Similarity {
   def cosineOf(dotAB: Column, na: Column, nb: Column): Column =
     try_divide(dotAB, sqrt(na * nb))
 
+  /** The near-dup family's vector frame (idCol, v, extra…, nrm):
+    * rebalanced, so an unsplittable single-row-group source cannot
+    * serialize the pair work; cast to double once; `extra` columns
+    * computed from `v`; and the squared norm, so the pairwise kernel is
+    * one dot product instead of three.
+    */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String,
+      extra: (String, Column)*): DataFrame =
+    (extra :+ ("nrm" -> norm2(col("v"))))
+      .foldLeft(Dedup.rebalance(df).select(col(idCol), asDouble(col(vecCol)).as("v"))) {
+        case (d, (name, c)) => d.withColumn(name, c)
+      }
+
+  /** n/d in doubles, rounded half-up to 4 decimals: floor(x·10⁴+0.5)/10⁴. */
+  private def rate4(n: Column, d: Column): Column =
+    floor(n.cast("double") / d.cast("double") * 10000 + lit(0.5)) / 10000
+
+  /** Cosine of a (va, na) × (vb, nb) pair from its precomputed norms. */
+  private def pairCosine: Column = cosineOf(dot(col("va"), col("vb")), col("na"), col("nb"))
+
   /** Exact all-pairs near-dup above a cosine threshold. O(n²) — the
     * verification baseline. Spark broadcasts the smaller side of the
     * nested-loop; use `lshBuckets`/IVF for large n.
     */
   def nearDupCosineExact(df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    // precompute per-vector squared norms once: the pairwise kernel is
-    // then a single dot product instead of three; rebalance so an
-    // unsplittable single-row-group source can't serialize the O(n²) loop
-    val v = Dedup.rebalance(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
+    val v = vectors(df, idCol, vecCol)
     val a = v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
+      .withColumn("cosine", pairCosine)
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -132,11 +147,11 @@ object Similarity {
   }
 
   /** SQL-expressible sign-bit bucket: packs the signs of the first
-    * `nDims` dimensions into a long. Unlike `hyperplaneBucket` (whose
-    * projections need the engine-native expression), this bucketing is
-    * reproducible in ANY SQL engine — `embedding[i] > 0` — so an
-    * external oracle can replay the exact candidate generation. Axis
-    * signs ARE hyperplane LSH with axis-aligned planes; recall per
+    * `nDims` dimensions into a long. Unlike the hyperplane buckets
+    * (whose projections need the engine-native expression), this
+    * bucketing is reproducible in ANY SQL engine — `embedding[i] > 0` —
+    * so an external oracle can replay the exact candidate generation.
+    * Axis signs ARE hyperplane LSH with axis-aligned planes; recall per
     * bucket bit for a pair at angle θ is (1 − θ/π).
     */
   def signBucket(vec: Column, nDims: Int): Column =
@@ -161,43 +176,31 @@ object Similarity {
       vecCol: String,
       threshold: Double,
       signDims: Int = 4): DataFrame = {
-    val v = Dedup.rebalance(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .withColumn("bucket", signBucket(col("v"), signDims))
+    val v = vectors(df, idCol, vecCol).withColumn("bucket", signBucket(col("v"), signDims))
     val a = v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na"), col("bucket"))
     val b = v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb"), col("bucket"))
     LshObserve.counted(
         a.join(b, Seq("bucket")).where(col("id_a") < col("id_b")),
         "verify_pairs_bucketed")
-      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
+      .withColumn("cosine", pairCosine)
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
-  /** Random-hyperplane LSH bucket id (nBits signs packed into a long).
-    * Hyperplane components are deterministic pseudo-random ±1 per
-    * (bit, dimension) derived from a fixed 64-bit mix — cheap, no
-    * stored model, reproducible everywhere. Native single-pass
-    * expression (`dims` is inferred from the vector; parameter kept
-    * for source compatibility).
-    */
-  def hyperplaneBucket(vec: Column, dims: Int, nBits: Int): Column =
-    graft.functions.VectorExprs.hyperplaneBucket(vec, nBits)
-
   /** Approximate near-dup via hyperplane-LSH bucketing: vectors in the
     * same bucket are candidates, verified exactly. Recall < 1 by
-    * construction (LSH); bucket join keeps the shuffle O(n).
+    * construction (LSH); bucket join keeps the shuffle O(n). Bucket
+    * ids are `nBits` deterministic pseudo-random ±1 hyperplane signs
+    * packed into a long (one native pass, no stored model).
     */
   def nearDupCosineLsh(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double,
-      dims: Int,
       nBits: Int = 8): DataFrame = {
     val v = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("bucket", hyperplaneBucket(col("v"), dims, nBits))
+      .withColumn("bucket", graft.functions.VectorExprs.hyperplaneBucket(col("v"), nBits))
     val a = v.select(col(idCol).as("id_a"), col("v").as("va"), col("bucket"))
     val b = v.select(col(idCol).as("id_b"), col("v").as("vb"), col("bucket"))
     a.join(b, Seq("bucket"))
@@ -205,6 +208,36 @@ object Similarity {
       .withColumn("cosine", cosine(col("va"), col("vb")))
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
+  }
+
+  /** The candidate/verify core of the banded channels: every distinct
+    * (la, lb) pair whose vectors share a bucket in any table of `keys`,
+    * joined back to both vectors and scored by exact cosine. `l` and
+    * `r` are [[vectors]] frames; passing the same frame twice makes it
+    * a self-join that keeps la < lb only. Shuffle rows are (8-byte id,
+    * tbl, bucket), O(n·tables); candidates dedup on the pair before the
+    * vector join, so each colliding pair is verified once. `tag` names
+    * the opt-in candidate and verify observations.
+    */
+  private def scoredCandidates(
+      l: DataFrame,
+      r: DataFrame,
+      idCol: String,
+      la: String,
+      lb: String,
+      keys: Seq[Column],
+      tag: String): DataFrame = {
+    def bands(v: DataFrame, id: String) =
+      v.select(col(idCol).as(id), posexplode(array(keys: _*)).as(Seq("tbl", "bucket")))
+    val pairs = bands(l, la).join(bands(r, lb), Seq("tbl", "bucket"))
+    val cands = LshObserve.counted(
+        (if (l eq r) pairs.where(col(la) < col(lb)) else pairs).select(la, lb),
+        s"cand_pairs_$tag")
+      .distinct()
+    LshObserve.counted(cands, s"verify_pairs_$tag")
+      .join(l.select(col(idCol).as(la), col("v").as("va"), col("nrm").as("na")), la)
+      .join(r.select(col(idCol).as(lb), col("v").as("vb"), col("nrm").as("nb")), lb)
+      .withColumn("cosine", pairCosine)
   }
 
   /** Multi-table hyperplane LSH near-dup: the recall lever a single
@@ -216,42 +249,23 @@ object Similarity {
     *
     * One native-kernel pass computes nTables·nBits sign bits; each
     * table's bucket is a bit-slice of that one long — no per-table
-    * re-projection. Shuffle is (id, table, bucket) rows, O(n·tables);
-    * candidates dedup on the pair id before the vector join, so the
-    * exact verify touches each colliding pair once.
+    * re-projection.
     */
   def nearDupCosineLshMulti(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double,
-      dims: Int,
       nBits: Int = 8,
       nTables: Int = 3): DataFrame = {
     require(nTables * nBits <= 63, "packed sign bits must fit one long")
-    val v = Dedup.rebalance(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("allbits",
-        graft.functions.VectorExprs.hyperplaneBucket(col("v"), nTables * nBits))
-      .withColumn("nrm", norm2(col("v")))
+    val v = vectors(df, idCol, vecCol, "allbits" ->
+      graft.functions.VectorExprs.hyperplaneBucket(col("v"), nTables * nBits))
       .persistTracked
     val mask = (1L << nBits) - 1
-    val tableBuckets = (0 until nTables).map(tb =>
+    val keys = (0 until nTables).map(tb =>
       shiftright(col("allbits"), tb * nBits).bitwiseAND(lit(mask)))
-    val banded = v.select(col(idCol),
-      posexplode(array(tableBuckets: _*)).as(Seq("tbl", "bucket")))
-    val cands = LshObserve.counted(
-        banded.select(col(idCol).as("id_a"), col("tbl"), col("bucket"))
-          .join(banded.select(col(idCol).as("id_b"), col("tbl"), col("bucket")),
-            Seq("tbl", "bucket"))
-          .where(col("id_a") < col("id_b"))
-          .select("id_a", "id_b"),
-        "cand_pairs_lsh_multi")
-      .distinct()
-    LshObserve.counted(cands, "verify_pairs_lsh_multi")
-      .join(v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
+    scoredCandidates(v, v, idCol, "id_a", "id_b", keys, "lsh_multi")
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -297,10 +311,32 @@ object Similarity {
     math.max(1L, m).toInt
   }
 
+  /** Banded bucket keys: table t's bucket is one native kernel pass
+    * over hyperplanes t·nBits .. t·nBits + nBits − 1, so tables are not
+    * limited by 64-bit packing.
+    */
+  private def bandKeys(nBits: Int, nTables: Int): Seq[Column] =
+    (0 until nTables).map(tb =>
+      graft.functions.VectorExprs.hyperplaneBucketAt(col("v"), nBits, tb * nBits))
+
+  /** [[nearDupCosineBanded]]'s scored candidates, before the threshold. */
+  private def bandedScored(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nRows: Long,
+      targetBucketRows: Long,
+      nTables: Int): DataFrame = {
+    val v = vectors(df, idCol, vecCol).persistTracked
+    scoredCandidates(v, v, idCol, "id_a", "id_b",
+      bandKeys(lshPlanBits(nRows, targetBucketRows), nTables), "banded")
+  }
+
   /** Cosine near-dup with SELF-SCALING buckets: hyperplane-LSH tables
-    * whose bit count grows with the corpus ([[lshPlanBits]] — expected
-    * bucket size ≤ `targetBucketRows` at ANY n), OR-ed over `nTables`
-    * tables for recall, exact verify on bucket collisions only.
+    * whose bit count grows with the corpus ([[lshPlanBits]] of the
+    * corpus row count `nRows` — expected bucket size ≤
+    * `targetBucketRows` at ANY n), OR-ed over `nTables` tables for
+    * recall, exact verify on bucket collisions only.
     *
     * Cost model (the reason this is the graded deployment path):
     * candidates ≈ nTables · n · targetBucketRows / 2 — LINEAR in n,
@@ -313,77 +349,23 @@ object Similarity {
     * why [[bandedRecallEval]] ships alongside: the deployed
     * (bits, tables) point is MEASURED, not guessed.
     *
-    * The convenience wrapper prices the corpus with one `df.count()`
-    * job; the deployed path supplies the row count from catalog
-    * statistics via [[nearDupCosineBandedWithStats]], so NO job runs
-    * at plan-build time. Each table's bucket is one native kernel pass
-    * at bit offset t·nBits, so tables are not limited by 64-bit
-    * packing.
+    * The caller supplies the row count (`graft.Memo.rows`, catalog
+    * statistics, a manifest), so building the plan runs no Spark job
+    * (PlanAuditSpec pins this) and the operator composes into larger
+    * lazy plans without materializing anything early.
     */
   def nearDupCosineBanded(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double,
-      targetBucketRows: Long = 64,
-      nTables: Int = 6): DataFrame =
-    nearDupCosineBandedWithStats(df, idCol, vecCol, threshold,
-      df.count(), targetBucketRows, nTables)
-
-  /** [[nearDupCosineBanded]] with the corpus row count supplied by the
-    * caller (catalog statistics / a metastore row count / yesterday's
-    * manifest) — the deployment form: bucket bits still follow the
-    * corpus size via [[lshPlanBits]], but plan construction runs ZERO
-    * Spark jobs (asserted by PlanAuditSpec), so the operator composes
-    * into larger lazy plans without materializing anything early.
-    */
-  def nearDupCosineBandedWithStats(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
       nRows: Long,
       targetBucketRows: Long = 64,
-      nTables: Int = 6): DataFrame = {
-    val nBits = lshPlanBits(nRows, targetBucketRows)
-    val v = Dedup.rebalance(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .persistTracked
-    val tableBuckets = (0 until nTables).map(tb =>
-      graft.functions.VectorExprs.hyperplaneBucketAt(col("v"), nBits, tb * nBits))
-    val banded = v.select(col(idCol),
-      posexplode(array(tableBuckets: _*)).as(Seq("tbl", "bucket")))
-    val cands = LshObserve.counted(
-        banded.select(col(idCol).as("id_a"), col("tbl"), col("bucket"))
-          .join(banded.select(col(idCol).as("id_b"), col("tbl"), col("bucket")),
-            Seq("tbl", "bucket"))
-          .where(col("id_a") < col("id_b"))
-          .select("id_a", "id_b"),
-        "cand_pairs_banded")
-      .distinct()
-    LshObserve.counted(cands, "verify_pairs_banded")
-      .join(v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
+      nTables: Int = 6): DataFrame =
+    bandedScored(df, idCol, vecCol, nRows, targetBucketRows, nTables)
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
-  }
 
-  /** Incremental banded cosine near-dup: each NEW vector against the
-    * accumulated CORPUS, never corpus×corpus — the daily-increment
-    * shape of [[Dedup.minHashNearDupsIncremental]] on the embedding
-    * channel. Bucket bits follow the CORPUS size (the side that
-    * grows; at deployment the corpus's (tbl, bucket) keys are the
-    * persisted index and its row count comes from catalog stats), so
-    * re-indexing cost and bucket sizes stay bounded as the corpus
-    * accumulates. Shuffle rows are (8-byte id, tbl, bucket) —
-    * O((new + corpus)·tables); exact cosine verify touches only
-    * bucket collisions.
-    *
-    * @return (id_new, id_old, cosine) — every near-dup link from the
-    *         batch into the corpus (a batch vector may hit many)
-    */
   /** The threshold OPERATING CURVE of the banded cosine near-dup —
     * candidate mass and verified-pair mass at every threshold of a
     * ladder, from ONE banded pair join at the deployed config (auto
@@ -396,8 +378,8 @@ object Similarity {
     *
     * Cost: identical to one [[nearDupCosineBanded]] run — the
     * threshold ladder is a multi-conditional aggregate over the same
-    * verified candidate set (the semDedupRateCurve trick), NOT one
-    * join per threshold.
+    * scored candidates (the semDedupRateCurve trick), NOT one join per
+    * threshold.
     *
     * @return one row per threshold: (threshold, n_candidates,
     *         n_pairs, pair_rate) — n_candidates is the banding's
@@ -412,25 +394,8 @@ object Similarity {
       thresholds: Seq[Double],
       targetBucketRows: Long = 64,
       nTables: Int = 6): DataFrame = {
-    val nBits = lshPlanBits(df.count(), targetBucketRows)
-    val v = Dedup.rebalance(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .persistTracked
-    val tableBuckets = (0 until nTables).map(tb =>
-      graft.functions.VectorExprs.hyperplaneBucketAt(col("v"), nBits, tb * nBits))
-    val banded = v.select(col(idCol),
-      posexplode(array(tableBuckets: _*)).as(Seq("tbl", "bucket")))
-    val cands = banded.select(col(idCol).as("id_a"), col("tbl"), col("bucket"))
-      .join(banded.select(col(idCol).as("id_b"), col("tbl"), col("bucket")),
-        Seq("tbl", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    val withCos = cands
-      .join(v.select(col(idCol).as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(v.select(col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
+    val withCos =
+      bandedScored(df, idCol, vecCol, graft.Memo.rows(df), targetBucketRows, nTables)
     val cntCols = thresholds.zipWithIndex.map { case (t, i) =>
       sum(when(col("cosine") >= t, 1L).otherwise(0L)).as(s"np$i")
     }
@@ -439,29 +404,23 @@ object Similarity {
     withCos.agg(count(lit(1)).as("n_candidates"), cntCols: _*)
       .select(inline(array(thresholds.zipWithIndex.map { case (t, i) => struct(
         lit(t).as("threshold"), col("n_candidates"), col(s"np$i").as("n_pairs"),
-        (floor(col(s"np$i").cast("double") /
-          greatest(col("n_candidates"), lit(1L)).cast("double") * 10000
-          + lit(0.5)) / 10000).as("pair_rate"))
+        rate4(col(s"np$i"), greatest(col("n_candidates"), lit(1L))).as("pair_rate"))
       }: _*)))
   }
 
-  def nearDupCosineBandedIncremental(
-      newDf: DataFrame,
-      corpusDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      targetBucketRows: Long = 64,
-      nTables: Int = 6): DataFrame =
-    nearDupCosineBandedIncrementalWithStats(newDf, corpusDf, idCol, vecCol,
-      threshold, corpusDf.count(), targetBucketRows, nTables)
-
-  /** [[nearDupCosineBandedIncremental]] with the corpus row count
-    * supplied from statistics — at deployment the corpus's row count
-    * is a property of the persisted index, so the daily increment
-    * plans with ZERO jobs at construction (PlanAuditSpec pins this).
+  /** Incremental banded cosine near-dup: each NEW vector against the
+    * accumulated CORPUS, never corpus×corpus — the daily-increment
+    * shape of [[Dedup.minHashNearDupsIncremental]] on the embedding
+    * channel. Bucket bits follow the corpus row count `corpusRows`
+    * (the side that grows; at deployment the corpus's (tbl, bucket)
+    * keys are the persisted index and its row count a property of it),
+    * so re-indexing cost and bucket sizes stay bounded as the corpus
+    * accumulates, and building the plan runs no job.
+    *
+    * @return (id_new, id_old, cosine) — every near-dup link from the
+    *         batch into the corpus (a batch vector may hit many)
     */
-  def nearDupCosineBandedIncrementalWithStats(
+  def nearDupCosineBandedIncremental(
       newDf: DataFrame,
       corpusDf: DataFrame,
       idCol: String,
@@ -469,40 +428,58 @@ object Similarity {
       threshold: Double,
       corpusRows: Long,
       targetBucketRows: Long = 64,
-      nTables: Int = 6): DataFrame = {
-    val nBits = lshPlanBits(corpusRows, targetBucketRows)
-    def prep(df: DataFrame) = Dedup.rebalance(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .persistTracked
-    def banded(v: DataFrame, as: String) = {
-      val tableBuckets = (0 until nTables).map(tb =>
-        graft.functions.VectorExprs.hyperplaneBucketAt(col("v"), nBits, tb * nBits))
-      v.select(col(idCol).as(as),
-        posexplode(array(tableBuckets: _*)).as(Seq("tbl", "bucket")))
-    }
-    val nv = prep(newDf)
-    val cv = prep(corpusDf)
-    val cands = LshObserve.counted(
-        banded(nv, "id_new")
-          .join(banded(cv, "id_old"), Seq("tbl", "bucket"))
-          .select("id_new", "id_old"),
-        "cand_pairs_banded_inc")
-      .distinct()
-    LshObserve.counted(cands, "verify_pairs_banded_inc")
-      .join(nv.select(col(idCol).as("id_new"), col("v").as("va"), col("nrm").as("na")), "id_new")
-      .join(cv.select(col(idCol).as("id_old"), col("v").as("vb"), col("nrm").as("nb")), "id_old")
-      .withColumn("cosine", cosineOf(dot(col("va"), col("vb")), col("na"), col("nb")))
+      nTables: Int = 6): DataFrame =
+    scoredCandidates(
+        vectors(newDf, idCol, vecCol).persistTracked,
+        vectors(corpusDf, idCol, vecCol).persistTracked,
+        idCol, "id_new", "id_old",
+        bandKeys(lshPlanBits(corpusRows, targetBucketRows), nTables), "banded_inc")
       .where(col("cosine") >= threshold)
       .select(col("id_new"), col("id_old"), col("cosine"))
+
+  /** Recall of an approximate near-dup channel's (id_a, id_b) pairs
+    * against exact ground truth — "measure, don't guess": every
+    * approximate path ships with a measured recall. Ground truth only
+    * exists via brute force, so the exact side runs on a DETERMINISTIC
+    * BOUNDED SAMPLE (id % mod == 0), while `approx` is the production
+    * operator over the FULL corpus, so the measurement includes
+    * bucket-boundary effects as deployed.
+    *
+    * The modulus grows with the corpus row count to hold the sample at
+    * ~2048 vectors (≈2M exact pairs at any n); `sampleMod` is a floor.
+    * A fixed modulus kept the sample PROPORTIONAL to the corpus and the
+    * exact all-pairs side O((n/mod)²) — quadratic, caught by the
+    * sf0.1→sf1→sf3 3-point sweep. The oracle replays the rule from its
+    * own count, so the two engines grade the same sample.
+    *
+    * @return one row: (n_exact, n_hit, recall)
+    */
+  private def sampledRecall(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      threshold: Double,
+      sampleMod: Int,
+      approx: DataFrame): DataFrame = {
+    val mod = math.max(sampleMod.toLong, (graft.Memo.rows(df) + 2047) / 2048)
+    val exact = nearDupCosineExact(df.where(pmod(col(idCol), lit(mod)) === 0),
+        idCol, vecCol, threshold)
+      .select(col("id_a"), col("id_b"))
+      .persistTracked
+    val hit = exact
+      .join(approx.select(col("id_a").as("la"), col("id_b").as("lb")),
+        col("id_a") === col("la") && col("id_b") === col("lb"), "left_semi")
+      .agg(count(lit(1)).as("n_hit"))
+    exact.agg(count(lit(1)).as("n_exact")).crossJoin(hit).select(
+      col("n_exact"), col("n_hit"),
+      when(col("n_exact") === 0, lit(1.0))
+        .otherwise(rate4(col("n_hit"), col("n_exact"))).as("recall"))
   }
 
   /** Measured recall of [[nearDupCosineBanded]] AT ITS DEPLOYED
-    * PARAMETERS against exact ground truth on a deterministic bounded
-    * sample (id % sampleMod == 0 — the same harness contract as
-    * [[lshRecallEval]]). The banded side runs the production operator
-    * over the FULL corpus, so the measurement includes the auto-scaled
-    * bit count and table OR exactly as deployed.
+    * PARAMETERS ([[sampledRecall]]): the banded side runs over the
+    * full corpus with the auto-scaled bit count and table OR exactly
+    * as deployed.
     *
     * @return one row: (n_bits, n_exact, n_hit, recall)
     */
@@ -514,48 +491,14 @@ object Similarity {
       targetBucketRows: Long,
       nTables: Int,
       sampleMod: Int): DataFrame = {
-    // count the corpus ONCE: the same n prices the reported bit count
-    // and the banded operator (threaded via the stats overload)
-    val n = df.count()
-    val nBits = lshPlanBits(n, targetBucketRows)
-    // ABSOLUTE sample bound (the lshRecallEval r9 scaling fix, applied
-    // here too): a fixed modulus keeps the ground-truth sample
-    // PROPORTIONAL to the corpus and the exact all-pairs side
-    // O((n/mod)²) — 77s at sf3 in the 3-point sweep. The effective
-    // modulus grows with n to hold the sample at ~2048 vectors;
-    // sampleMod stays a floor, so small-corpus results are unchanged,
-    // and the oracle replays the same rule from its own count.
-    val mod = math.max(sampleMod.toLong, (n + 2047) / 2048)
-    val sample = df.where(pmod(col(idCol), lit(mod)) === 0)
-    val exact = nearDupCosineExact(sample, idCol, vecCol, threshold)
-      .select(col("id_a"), col("id_b"))
-      .persistTracked
-    val banded = nearDupCosineBandedWithStats(df, idCol, vecCol, threshold,
-      n, targetBucketRows, nTables)
-      .select(col("id_a").as("la"), col("id_b").as("lb"))
-    val hit = exact
-      .join(banded, col("id_a") === col("la") && col("id_b") === col("lb"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val tot = exact.agg(count(lit(1)).as("n_exact"))
-    tot.crossJoin(hit).select(
-      lit(nBits.toLong).as("n_bits"),
-      col("n_exact"), col("n_hit"),
-      when(col("n_exact") === 0, lit(1.0))
-        .otherwise(floor(col("n_hit").cast("double") / col("n_exact") * 10000
-          + lit(0.5)) / 10000).as("recall"))
+    val n = graft.Memo.rows(df)
+    sampledRecall(df, idCol, vecCol, threshold, sampleMod,
+      nearDupCosineBanded(df, idCol, vecCol, threshold, n, targetBucketRows, nTables))
+      .select(lit(lshPlanBits(n, targetBucketRows).toLong).as("n_bits"), col("*"))
   }
 
-  /** Recall evaluation of hyperplane-LSH near-dup against exact ground
-    * truth — "measure, don't guess" as a first-class operator: every
-    * approximate path ships with a measured recall. Ground truth only
-    * exists via brute force, so the exact side runs on a DETERMINISTIC
-    * BOUNDED SAMPLE (id % sampleMod == 0) — the corpus-side all-pairs
-    * join the graded dedup paths never do is exactly what a recall
-    * harness must do, on a sample sized to the evaluation budget
-    * (at 100 TB: sampleMod large enough that the sample fits one
-    * executor's broadcast). The LSH side runs the production operator
-    * over the FULL corpus, so the measurement includes bucket-boundary
-    * effects as deployed.
+  /** Measured recall of the fixed-bits hyperplane-LSH near-dup
+    * ([[nearDupCosineLsh]] at `nBits`), by [[sampledRecall]].
     *
     * @return one row: (n_exact, n_hit, recall)
     */
@@ -564,37 +507,10 @@ object Similarity {
       idCol: String,
       vecCol: String,
       threshold: Double,
-      dims: Int,
       nBits: Int,
-      sampleMod: Int): DataFrame = {
-    // ABSOLUTE sample bound (r9 scaling fix): `sampleMod` alone keeps
-    // the ground-truth sample PROPORTIONAL to the corpus, making the
-    // exact all-pairs side O((n/mod)²) — quadratic by construction,
-    // caught by the sf0.1→sf1→sf3 3-point sweep (0.3s→11s→16s). The
-    // effective modulus grows with n so the exact side stays ~2048
-    // vectors (≈2M pairs, constant) at any corpus size; sampleMod acts
-    // as a floor. One count() prices the corpus at build time — the
-    // same documented exception as nearDupCosineBanded's bits-from-n
-    // rule, and the oracle replays the rule verbatim from its own
-    // count, so the two engines cannot disagree on the sample.
-    val n = df.count()
-    val mod = math.max(sampleMod.toLong, (n + 2047) / 2048).toInt
-    val sample = df.where(pmod(col(idCol), lit(mod)) === 0)
-    val exact = nearDupCosineExact(sample, idCol, vecCol, threshold)
-      .select(col("id_a"), col("id_b"))
-      .persistTracked
-    val lsh = nearDupCosineLsh(df, idCol, vecCol, threshold, dims, nBits)
-      .select(col("id_a").as("la"), col("id_b").as("lb"))
-    val hit = exact
-      .join(lsh, col("id_a") === col("la") && col("id_b") === col("lb"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val tot = exact.agg(count(lit(1)).as("n_exact"))
-    tot.crossJoin(hit).select(
-      col("n_exact"), col("n_hit"),
-      when(col("n_exact") === 0, lit(1.0))
-        .otherwise(floor(col("n_hit").cast("double") / col("n_exact") * 10000
-          + lit(0.5)) / 10000).as("recall"))
-  }
+      sampleMod: Int): DataFrame =
+    sampledRecall(df, idCol, vecCol, threshold, sampleMod,
+      nearDupCosineLsh(df, idCol, vecCol, threshold, nBits))
 
   /** Semantic benchmark decontamination — the embedding-side
     * complement of [[Corpus.contamination]]'s shingle overlap: a
@@ -911,16 +827,9 @@ object Similarity {
       iters: Int,
       targetRows: Int = 0,
       slack: Int = 4): BisectTree = {
-    // key = canonicalized-plan string + semanticHash: the string
-    // alone elides wide field lists past
-    // spark.sql.debug.maxToStringFields (a theoretical cross-corpus
-    // collision, ADVICE r16); a collision now needs both the elided
-    // string AND the full-plan semantic hash to agree
-    val plan = corpus.select(col(idCol), col(vecCol)).queryExecution.analyzed
-    val planKey =
-      s"${plan.semanticHash()}:${plan.canonicalized.toString}"
     graft.Memo.get(corpus.sparkSession, graft.Memo.Trees,
-        (planKey, nCells, iters, targetRows, slack)) {
+        (graft.Memo.planKey(corpus.select(col(idCol), col(vecCol))),
+          nCells, iters, targetRows, slack)) {
       treeBuilds.incrementAndGet()
       val (assigned, levels) =
         bisectAssigned(corpus, idCol, vecCol, nCells, iters, targetRows, slack)
@@ -1276,18 +1185,47 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
       .persistTracked
     val cents = kmeansCentroids(corpus, idCol, vecCol, nCells, iters)
-    val ivf = annIvfWithCentroids(queries, corpus, cents, idCol, vecCol, k, nProbe)
-      .select(col("query_id").as("iq"), col("neighbor_id").as("in_"))
+    perQueryRecall(truth,
+      annIvfWithCentroids(queries, corpus, cents, idCol, vecCol, k, nProbe))
+  }
+
+  /** Per-query recall of `approx`'s (query_id, neighbor_id) rows
+    * against `truth`'s: n_truth = |truth top-k|, n_hit = |approx ∩
+    * truth| — exact integer counts, recall the single terminal division
+    * rounded half-up to 4 decimals.
+    */
+  private def perQueryRecall(truth: DataFrame, approx: DataFrame): DataFrame = {
     val hits = truth
-      .join(ivf, col("query_id") === col("iq") && col("neighbor_id") === col("in_"),
-        "left_semi")
+      .join(approx.select(col("query_id").as("iq"), col("neighbor_id").as("in_")),
+        col("query_id") === col("iq") && col("neighbor_id") === col("in_"), "left_semi")
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
     truth.groupBy(col("query_id")).agg(count(lit(1)).as("n_truth"))
       .join(hits, Seq("query_id"), "left")
       .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
       .select(col("query_id"), col("n_truth"), col("n_hit"),
-        (floor(col("n_hit").cast("double") / col("n_truth").cast("double")
-          * 10000 + lit(0.5)) / 10000).as("recall"))
+        rate4(col("n_hit"), col("n_truth")).as("recall"))
+  }
+
+  /** The kNN harnesses' query sample and its brute-force top-k truth
+    * (query_id, neighbor_id), persisted: the queries with
+    * id % mod == 0, the modulus growing with the query row count to
+    * hold ~256 queries (`sampleMod` a floor — the lshRecallEval rule),
+    * so the truth is O(256 · corpus) at any scale. The oracle replays
+    * the modulus from its own count, so the two engines grade the
+    * identical query set.
+    */
+  private def sampledTruth(
+      queries: DataFrame,
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      sampleMod: Int): (DataFrame, DataFrame) = {
+    val mod = math.max(sampleMod.toLong, (graft.Memo.rows(queries) + 255) / 256)
+    val qs = queries.where(pmod(col(idCol), lit(mod)) === 0)
+    (qs, annTopKBruteForce(qs, corpus, idCol, vecCol, k)
+      .select(col("query_id"), col("neighbor_id"))
+      .persistTracked)
   }
 
   /** Measured recall@k of the BOTH-SIDES-DISTRIBUTED kNN join
@@ -1321,25 +1259,9 @@ object Similarity {
       iters: Int,
       sampleMod: Int,
       targetRows: Int = 0): DataFrame = {
-    val nQ = queries.count()
-    val mod = math.max(sampleMod.toLong, (nQ + 255) / 256).toInt
-    val qs = queries.where(pmod(col(idCol), lit(mod.toLong)) === 0)
-    val truth = annTopKBruteForce(qs, corpus, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .persistTracked
-    val ivf =
-      knnJoinIvf(qs, corpus, idCol, vecCol, k, nCells, nProbe, iters, targetRows)
-      .select(col("query_id").as("iq"), col("neighbor_id").as("in_"))
-    val hits = truth
-      .join(ivf, col("query_id") === col("iq") && col("neighbor_id") === col("in_"),
-        "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    truth.groupBy(col("query_id")).agg(count(lit(1)).as("n_truth"))
-      .join(hits, Seq("query_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .select(col("query_id"), col("n_truth"), col("n_hit"),
-        (floor(col("n_hit").cast("double") / col("n_truth").cast("double")
-          * 10000 + lit(0.5)) / 10000).as("recall"))
+    val (qs, truth) = sampledTruth(queries, corpus, idCol, vecCol, k, sampleMod)
+    perQueryRecall(truth,
+      knnJoinIvf(qs, corpus, idCol, vecCol, k, nCells, nProbe, iters, targetRows))
   }
 
   def annIvf(
@@ -1504,8 +1426,7 @@ object Similarity {
     totalRow.crossJoin(broadcast(prunedRow))
       .select(inline(array(epss.zipWithIndex.map { case (e, i) => struct(
         lit(e).as("eps"), col("n_total"), col(s"np$i").as("n_pruned"),
-        (floor(col(s"np$i").cast("double") / col("n_total").cast("double")
-          * 10000 + lit(0.5)) / 10000).as("prune_rate"))
+        rate4(col(s"np$i"), col("n_total")).as("prune_rate"))
       }: _*)))
   }
 
@@ -1705,12 +1626,7 @@ object Similarity {
     require(nProbes.nonEmpty && nProbes.forall(p => p > 0 && (p & (p - 1)) == 0)
       && nProbes.distinct.size == nProbes.size,
       "probe widths must be distinct powers of two (they double as mask bits)")
-    val nQ = queries.count()
-    val mod = math.max(sampleMod.toLong, (nQ + 255) / 256).toInt
-    val qs = queries.where(pmod(col(idCol), lit(mod.toLong)) === 0)
-    val truth = annTopKBruteForce(qs, corpus, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .persistTracked
+    val (qs, truth) = sampledTruth(queries, corpus, idCol, vecCol, k, sampleMod)
     val tree =
       bisectAssignedCached(corpus, idCol, vecCol, nCells, iters, targetRows)
     val assigned = tree.assigned
@@ -1743,9 +1659,7 @@ object Similarity {
     truthCnt.crossJoin(broadcast(hitRow))
       .select(inline(array(nProbes.map(p => struct(
         lit(p).as("n_probe"), col("n_queries"), col("n_truth"),
-        col(s"h$p").as("n_hit"),
-        (floor(col(s"h$p").cast("double") / col("n_truth").cast("double")
-          * 10000 + lit(0.5)) / 10000).as("recall"))): _*)))
+        col(s"h$p").as("n_hit"), rate4(col(s"h$p"), col("n_truth")).as("recall"))): _*)))
   }
 
   /** The vector index's row table as rows: every corpus vector's cell

@@ -401,7 +401,7 @@ private[graft] object OracleDsl {
       .mkString("CASE ", " ", " ELSE CAST(error('banded oracle sign matrix supports at most " +
         s"$duckBandedMaxBits bits per table') AS INTEGER) END")
 
-  /** CTE block replaying `Similarity.nearDupCosineBanded(_, _, _, thr,
+  /** CTE block replaying `Similarity.nearDupCosineBanded(_, _, _, thr, n,
     * 64, 6)` bit-exactly on top of a caller-supplied
     * `v(vec_id, e DOUBLE[])` CTE: bits-from-count rule (bpar), sign
     * matrix (bsgm), per-table bucket as the sign-bit sum of

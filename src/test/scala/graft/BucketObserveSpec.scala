@@ -52,7 +52,7 @@ class BucketObserveSpec extends SparkSpec {
     sys.props("graft.observe") = "1" // counts are opt-in (see LshObserve)
     try {
       val out = graft.operators.Similarity
-        .nearDupCosineBanded(emb, "vec_id", "embedding", 0.4).count()
+        .nearDupCosineBanded(emb, "vec_id", "embedding", 0.4, Memo.rows(emb)).count()
       org.apache.spark.GraftListenerBridge
         .waitListenerBusEmpty(spark.sparkContext, 10000)
       val cand = Option(buf.get("cand_pairs_banded")).map(_.longValue)
@@ -71,7 +71,7 @@ class BucketObserveSpec extends SparkSpec {
   test("observe counts default OFF: no CollectMetrics in the graded plan") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val plan = graft.operators.Similarity
-      .nearDupCosineBanded(emb, "vec_id", "embedding", 0.4)
+      .nearDupCosineBanded(emb, "vec_id", "embedding", 0.4, Memo.rows(emb))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CollectMetrics"),
       s"candidate counting must be opt-in (codegen-span cost):\n$plan")

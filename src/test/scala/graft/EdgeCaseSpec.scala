@@ -222,11 +222,11 @@ class EdgeCaseSpec extends SparkSpec {
     val emptyVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     // banded near-dup on an empty corpus: count()=0 -> 1-bit plan, no rows
     assert(Similarity.nearDupCosineBanded(
-      emptyVecs, "vec_id", "embedding", 0.4).count() == 0)
+      emptyVecs, "vec_id", "embedding", 0.4, graft.Memo.rows(emptyVecs)).count() == 0)
     // a single vector can never pair with itself
+    val one = Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
     assert(Similarity.nearDupCosineBanded(
-      Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", 0.4).count() == 0)
+      one, "vec_id", "embedding", 0.4, graft.Memo.rows(one)).count() == 0)
     // recall harness on empty: n_exact=0 reports recall 1.0 by contract
     val r = Similarity.bandedRecallEval(
       emptyVecs, "vec_id", "embedding", 0.4, 64, 6, 2).collect().head

@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.Caching.TrackedDf
@@ -27,6 +29,61 @@ class MemoSpec extends SparkSpec {
     val docs = Memo.get(spark, Memo.Tables, table("documents"))(fail("documents not memoized"))
     val merges = Memo.get(spark, Memo.BpeMerges, (sfDir, "ws"))(fail("merges not memoized"))
     (corpus, tree, tree.flat, docs, merges)
+  }
+
+  /** `body`'s value and the Spark jobs it started. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val v = body
+      GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+      (v, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A filter on a `t()` table that no other test counts. */
+  private def slice(s: org.apache.spark.sql.SparkSession, m: Int) =
+    SparkEntry.t(s, sfDir, "embeddings").where(col("vec_id") % 97 === m)
+
+  test("two equal plans over one t() table run one count") {
+    val (n, cold) = jobsIn(Memo.rows(slice(spark, 11)))
+    assert(cold > 0, "the first count must run")
+    val (again, warm) = jobsIn(Memo.rows(slice(spark, 11)))
+    assert(again == n && warm == 0, s"an equal plan ran $warm job(s)")
+    assert(n == slice(spark, 11).count())
+  }
+
+  test("a fresh read of a rewritten parquet path is counted again") {
+    val dir = Files.createTempDirectory("memo_rows").resolve("t").toString
+    spark.range(3).write.parquet(dir)
+    val first = spark.read.parquet(dir)
+    assert(Memo.rows(first) == 3)
+    // an unchanged path read again is the same key (the read itself
+    // may run a footer job, so it stays outside the measured region)
+    val reread = spark.read.parquet(dir)
+    assert(jobsIn(Memo.rows(reread)) == ((3L, 0)))
+    spark.range(5).write.mode("overwrite").parquet(dir)
+    val second = spark.read.parquet(dir)
+    assert(Memo.planKey(second) != Memo.planKey(first), "the tree memo would reuse a stale tree")
+    assert(Memo.rows(second) == 5)
+  }
+
+  test("a stopped session's entries are purged") {
+    // one JVM holds one SparkContext, and stopping the suites' shared one
+    // would end every suite after this, so the probe runs in a JVM of
+    // its own: same classpath and JVM flags, a smaller heap
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++
+      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
+      Seq("-Xmx768m", "-cp", jvm.getClassPath, "graft.MemoPurgeProbe")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() == 0, out.takeRight(20).mkString("\n"))
+    assert(out.contains("purge rows=1 stopped=1 after=1"), out.takeRight(20).mkString("\n"))
   }
 
   test("eight threads asking for one key run its build once") {
@@ -54,8 +111,10 @@ class MemoSpec extends SparkSpec {
   test("Caching.release() leaves tables, BPE merge tables and trees intact") {
     val (corpus, tree, bc, docs, merges) = memoized()
     val builds = Similarity.treeBuilds.get()
+    val n = Memo.rows(slice(spark, 12))
     val mine = Seq(1L, 2L).toDF("id").persistTracked
     Caching.release()
+    assert(jobsIn(Memo.rows(slice(spark, 12))) == ((n, 0)), "release() must not drop row counts")
     assert(mine.storageLevel == StorageLevel.NONE, "release() must unpersist intermediates")
     assert(Memo.size(Memo.Intermediates) == 0)
     assert(Memo.get(spark, Memo.Tables, table("documents"))(fail("table rebuilt")) eq docs)
@@ -96,6 +155,10 @@ class MemoSpec extends SparkSpec {
     assert(Memo.get(spark, Memo.ProbeWidths, key)(1) == 1)
     assert(Memo.get(other, Memo.ProbeWidths, key)(2) == 2)
     assert(Memo.get(spark, Memo.ProbeWidths, key)(fail("rebuilt")) == 1)
+    val n = Memo.rows(slice(spark, 13))
+    val rows = Memo.size(Memo.Rows)
+    val (counted, jobs) = jobsIn(Memo.rows(slice(other, 13)))
+    assert(counted == n && jobs > 0 && Memo.size(Memo.Rows) == rows + 1)
   }
 
   test("only Memo keys state on a SparkSession or asks whether a context is stopped") {
@@ -112,5 +175,23 @@ class MemoSpec extends SparkSpec {
     assert(memo.size == 1 && offends(memo.head), "the scan must see Memo's own map")
     val offenders = others.filter(offends)
     assert(offenders.isEmpty, s"session-keyed state outside Memo: $offenders")
+  }
+}
+
+/** [[MemoSpec]]'s stopped-session probe: a row count memoized in a
+  * session survives that session's stop, and the next session's first
+  * memo call drops it. Prints the entry counts at each step.
+  */
+object MemoPurgeProbe {
+  def main(args: Array[String]): Unit = {
+    val first = GraftSession.local(1)
+    Memo.rows(first.range(4).toDF())
+    val rows = Memo.size(Memo.Rows)
+    first.stop()
+    val stopped = Memo.size(Memo.Rows)
+    val next = GraftSession.local(1)
+    Memo.rows(next.range(6).toDF())
+    println(s"purge rows=$rows stopped=$stopped after=${Memo.size(Memo.Rows)}")
+    next.stop()
   }
 }

@@ -262,10 +262,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("cosine family with supplied stats: zero jobs at plan build") {
-    // the deployed banded path prices LSH bits from catalog statistics
-    // (nearDupCosineBandedWithStats / ...IncrementalWithStats) — plan
-    // construction must run NO Spark job; only the counting convenience
-    // wrappers are allowed their one count()
+    // the banded operators price LSH bits from a caller-supplied row
+    // count (catalog statistics, a manifest, Memo.rows) — plan
+    // construction must run NO Spark job
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -276,10 +275,10 @@ class PlanAuditSpec extends SparkSpec {
     emb.schema // parquet footer read outside the measured region
     spark.sparkContext.addSparkListener(listener)
     try {
-      Similarity.nearDupCosineBandedWithStats(
+      Similarity.nearDupCosineBanded(
         emb, "vec_id", "embedding", 0.4, nRows = 2000L)
         .queryExecution.executedPlan
-      Similarity.nearDupCosineBandedIncrementalWithStats(
+      Similarity.nearDupCosineBandedIncremental(
         emb.where(col("vec_id") % 10 === 0), emb.where(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", 0.4, corpusRows = 1800L)
         .queryExecution.executedPlan
@@ -287,6 +286,45 @@ class PlanAuditSpec extends SparkSpec {
       assert(jobs.get() == 0,
         s"stats-supplied banded plan build ran ${jobs.get()} Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a second build of the kNN and SemDeDup queries runs no job") {
+    // the first build counts the corpus (and query side) once per
+    // session and trains the tree; a rebuild reuses both from the memo
+    val names = Seq("knn_recall_eval", "knn_recall_curve", "knn_join_ivf",
+      "ann_ivf_incremental", "ann_ivf_drift", "semdedup_prune",
+      "semdedup_rate_curve", "semdedup_fidelity_eval")
+    names.foreach(n => SparkEntry.queries(n)(spark, sfDir))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      names.foreach(n => SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan)
+      org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+      assert(jobs.get() == 0, s"a second build ran ${jobs.get()} Spark job(s)")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.operators.Caching.release()
+    }
+  }
+
+  test("Plans.formatted prints one text for two builds of one plan") {
+    val session = spark
+    import session.implicits._
+    // a checkpointed RDD (its id and call site) and a typed map (its
+    // lambda's address), under expression ids that differ per build
+    def q() = {
+      val cp = spark.range(8).localCheckpoint()
+      cp.as[Long].map(_ * 2).toDF("id").join(cp, "id")
+    }
+    val (a, b) = (Plans.formatted(q()), Plans.formatted(q()))
+    assert(a == b, s"two builds print differently:\n$a\n----\n$b")
+    assert("""Lambda\$\d|RDD\[\d|\.scala:\d""".r.findFirstIn(a).isEmpty, a)
+    assert(a.contains("#0") && a.contains("$Lambda") && a.contains("RDD[_]"), a)
   }
 
   /** Logical-plan collector for windows with an EMPTY partition spec —

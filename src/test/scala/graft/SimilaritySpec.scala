@@ -70,7 +70,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH near-dup finds the close pair (bucketed, no full cross)") {
-    val pairs = Similarity.nearDupCosineLsh(vecs, "vec_id", "embedding", 0.9, dims = 3)
+    val pairs = Similarity.nearDupCosineLsh(vecs, "vec_id", "embedding", 0.9)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // LSH recall < 1 in general, but vectors this close share all 8
     // hyperplane signs with overwhelming probability
@@ -104,8 +104,8 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val single = key(Similarity.nearDupCosineLsh(emb, "vec_id", "embedding", 0.4, 64, 8))
-    val multi = key(Similarity.nearDupCosineLshMulti(emb, "vec_id", "embedding", 0.4, 64, 8, 3))
+    val single = key(Similarity.nearDupCosineLsh(emb, "vec_id", "embedding", 0.4, 8))
+    val multi = key(Similarity.nearDupCosineLshMulti(emb, "vec_id", "embedding", 0.4, 8, 3))
     assert(single.subsetOf(multi),
       s"multi-table must dominate: missing ${single.diff(multi)}")
     // every multi pair is a true near-dup (verify step is exact)
@@ -146,7 +146,8 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val banded = key(Similarity.nearDupCosineBanded(emb, "vec_id", "embedding", 0.4))
+    val banded =
+      key(Similarity.nearDupCosineBanded(emb, "vec_id", "embedding", 0.4, Memo.rows(emb)))
     val exact = key(Similarity.nearDupCosineExact(emb, "vec_id", "embedding", 0.4))
     // verify step is exact: every emitted pair is a true near-dup
     assert(banded.subsetOf(exact), s"false positives: ${banded.diff(exact)}")
@@ -173,7 +174,8 @@ class SimilaritySpec extends SparkSpec {
     assert(ns == ns.sorted.reverse, s"not monotone: $ns")
     assert(ns.head <= curve(0.3)._1)
     // the 0.4 ladder point recounts the graded bucketed join exactly
-    val deployed = Similarity.nearDupCosineBanded(emb, "vec_id", "embedding", 0.4).count()
+    val deployed =
+      Similarity.nearDupCosineBanded(emb, "vec_id", "embedding", 0.4, Memo.rows(emb)).count()
     assert(curve(0.4)._2 == deployed,
       s"curve point ${curve(0.4)._2} != deployed join $deployed")
   }
@@ -183,7 +185,7 @@ class SimilaritySpec extends SparkSpec {
     val batch = emb.where(col("vec_id") % 10 === 0)
     val corpus = emb.where(col("vec_id") % 10 =!= 0)
     val links = Similarity.nearDupCosineBandedIncremental(
-      batch, corpus, "vec_id", "embedding", 0.3)
+      batch, corpus, "vec_id", "embedding", 0.3, Memo.rows(corpus))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(links.nonEmpty, "no cross links found at 0.3")
     links.foreach { case (n, o) =>

@@ -465,7 +465,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
       stream, corpus, "vec_id", "embedding", 0.3, nBits)
     Streams.runToMemoryAvailableNow(out, "eq_coslinks", OutputMode.Append())
     val batch = graft.operators.Similarity.nearDupCosineBandedIncremental(
-      emb.where(col("vec_id") % 10 === 0), corpus, "vec_id", "embedding", 0.3)
+      emb.where(col("vec_id") % 10 === 0), corpus, "vec_id", "embedding", 0.3,
+      Memo.rows(corpus))
     assert(rowSet(spark.table("eq_coslinks")) == rowSet(batch),
       "streaming cosine links diverged from batch incremental")
   }
