@@ -5,7 +5,7 @@ import java.util.concurrent.{ExecutionException, FutureTask}
 import scala.util.hashing.MurmurHash3
 
 import graft.operators.Similarity.BisectTree
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 
@@ -39,6 +39,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    rules (`Similarity.cellsPlan`, `Similarity.lshPlanBits`,
   *    `Multimodal.nearDupKeysPlan`). The first query of a session over
   *    a (table, filter) pays the count; later builds plan with no job.
+  *  - [[Replays]]: `Streams.replay`'s micro-batch checkpoints, read
+  *    by the caller's action after the stream ends.
   *
   * [[get]] builds each key once, even under concurrent callers: the
   * first caller runs the build outside the lock (a tree build is a
@@ -51,11 +53,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * to message.
   *
   * [[evict]] drops one family in every session and runs its release
-  * hook: trees unpersist their checkpoint blocks and destroy the
-  * broadcast, intermediates unpersist. `Caching.release()` evicts the
-  * intermediates only, so tables, widths, merge tables and trees
-  * survive the per-query hygiene of Bench and Verify by design:
-  * derived queries measure reuse. `SparkEntry.evictTrainerMemo`
+  * hook: trees and replays unpersist their checkpoint blocks (trees
+  * also destroy the broadcast), intermediates unpersist.
+  * `Caching.release()` evicts intermediates and replays only, so the
+  * other families survive the per-query hygiene of Bench and Verify
+  * by design: derived queries measure reuse. `SparkEntry.evictTrainerMemo`
   * evicts a family before every pass of its trainer query, so that
   * query measures a real build.
   *
@@ -91,9 +93,13 @@ object Memo {
     override private[Memo] def release(df: DataFrame): Unit = { df.unpersist(blocking = false); () }
   }
   case object Rows extends Family[Long]
+  case object Replays extends Family[DataFrame] {
+    override private[Memo] def release(df: DataFrame): Unit =
+      GraftBridge.checkpointRdds(df).foreach(_.unpersist(blocking = false))
+  }
 
   private val families: Seq[Family[_]] =
-    Seq(Tables, ProbeWidths, BpeMerges, Trees, Intermediates, Rows)
+    Seq(Tables, ProbeWidths, BpeMerges, Trees, Intermediates, Rows, Replays)
 
   /** `df`'s memo key: its canonicalized analyzed plan, the plan's
     * semantic hash (the string elides wide field lists) and a hash of

@@ -54,6 +54,9 @@ object Plans {
       try println(formatted(SparkEntry.queries(name)(spark, sfDir)))
       catch { case e: Throwable => println(s"error: ${e.getMessage}") }
       println("```")
+      // as Bench does: no plan may read an earlier query's cached frames
+      graft.operators.Caching.release()
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
-  SparkListenerJobStart}
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   * predicts the per-query number in bench.json. Repetitions clear the
   * cache between runs (like Bench does between queries) so the
   * steady-state rep isolates query cost from JIT/classload warmup.
-  * Every rep prints each Spark job's wall time, stage count and the
+  * Every rep prints each Spark job's wall time, the bytes its tasks
+  * returned to the driver as results, its stage count and the
   * action behind it (the SQL execution's description, e.g. `count at
   * SparkEntry.scala:833`; a job outside any SQL execution prints its
   * stages' call sites and task counts) — where a multi-level plan
@@ -53,6 +54,9 @@ object RunOne {
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     sc.addSparkListener(new SparkListener {
       private val starts = scala.collection.mutable.Map[Int, (Long, String)]()
+      // per job, the bytes its tasks returned to the driver as results
+      private val stageJob = scala.collection.mutable.Map[Int, Int]()
+      private val resultBytes = scala.collection.mutable.Map[Int, Long]().withDefaultValue(0L)
       // the action behind each running SQL execution (`count at
       // SparkEntry.scala:833`): under AQE a job's own call site is the
       // stage-materialization thread's, the same for every job
@@ -65,15 +69,21 @@ object RunOne {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val action = Option(js.properties)
           .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-          .flatMap(id => actions.get(id.toLong))
+          .flatMap(id => actions.get(id.toLong)).filter(_.nonEmpty)
         val site = action.getOrElse(js.stageInfos
           .map(si => s"${si.name.takeWhile(_ != '\n').take(60)}/${si.numTasks}")
           .mkString(" | "))
         starts(js.jobId) = (js.time, s"stages=${js.stageInfos.size} $site")
+        js.stageIds.foreach(stageJob(_) = js.jobId)
       }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        for (m <- Option(te.taskMetrics); j <- stageJob.get(te.stageId))
+          resultBytes(j) += m.resultSize
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         starts.remove(je.jobId).foreach { case (t0, site) =>
-          jobLines.add(f"[job] id=${je.jobId}%-4d dt=${(je.time - t0) / 1e3}%7.3fs  $site")
+          val bytes = resultBytes.remove(je.jobId).getOrElse(0L)
+          jobLines.add(
+            f"[job] id=${je.jobId}%-4d dt=${(je.time - t0) / 1e3}%7.3fs result=${bytes}%dB  $site")
         }
     })
     def drainJobs(): Seq[String] = {

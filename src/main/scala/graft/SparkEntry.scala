@@ -1,11 +1,13 @@
 package graft
 
 import graft.operators.Caching.TrackedDf
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.{Corpus, Curation, Dedup, Embeddings, Html, Multimodal, Similarity, Skew, Tar, Temporal, TextAnalysis, Warc, Web}
+import graft.sources.Sources
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -67,6 +69,24 @@ object SparkEntry {
     t(s, dir, "documents").select(col("doc_id"),
       concat(col("text"), lit(" café münchen 東京 "),
         (col("doc_id") % 7).cast("string")).as("mtext"))
+
+  /** `out` replayed to completion, its micro-batch shuffles sized to `table`'s bytes. */
+  private def replayed(out: DataFrame, mode: OutputMode, dir: String, table: String): DataFrame =
+    graft.streaming.Streams.replay(out, mode, Sources.sizedShufflePartitions(dir, table))
+
+  /** Documents streamed as (source, token) rows, with the exact
+    * distinct-token count per source the cardinality replays report.
+    */
+  private def sourceTokens(s: SparkSession, dir: String): (Dataset[(String, String)], DataFrame) = {
+    import s.implicits._
+    val docs = t(s, dir, "documents")
+    def toks(df: DataFrame) =
+      df.select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
+    val stream = graft.sources.Sources.streamTable(s, dir, "documents", docs.schema)
+      .where(col("doc_id").isNotNull && col("text").isNotNull && col("source").isNotNull)
+    (toks(stream).as[(String, String)],
+      toks(docs).distinct().groupBy(col("source")).agg(count(lit(1)).as("n_exact")))
+  }
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Memo.get(s, Memo.Tables, s"$dir/$name.parquet") {
@@ -981,10 +1001,8 @@ object SparkEntry {
       val out = Similarity.assignIncrementalStream(
         st0.where(col("vec_id") % 2 === 0), corpus, "vec_id", "embedding",
         nCells, iters = 1, targetRows = 64)
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_ann",
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "embeddings"))
-      s.table("g_stream_ann").select(col("vec_id"), col("cell_id"))
+      replayed(out, OutputMode.Append(), dir, "embeddings")
+        .select(col("vec_id"), col("cell_id"))
     }),
 
     // ---- §2b: embedding preparation ---------------------------------
@@ -1174,10 +1192,7 @@ object SparkEntry {
         "doc_id", "img")
       val out = graft.streaming.Streams.incrementalHashNearDupStream(
         stHashed, corpus, "doc_id", "dhash", 3)
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_phash",
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "documents"))
-      s.table("g_stream_phash")
+      replayed(out, OutputMode.Append(), dir, "documents")
         .select(col("id_new"), col("id_old"), col("hamming"))
     }),
 
@@ -1829,25 +1844,13 @@ object SparkEntry {
     // bitmap per source (O(m) state), exact side batch-computed as in
     // the batch twin — oracle: cardinality_sketch's, verbatim
     "stream_cardinality_sketch" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val stream = graft.sources.Sources
-        .streamTable(s, dir, "documents", docs.schema)
-        .where(col("doc_id").isNotNull && col("text").isNotNull
-          && col("source").isNotNull)
-        .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .as[(String, String)]
+      val (stream, exact) = sourceTokens(s, dir)
       val out = graft.streaming.Streams.distinctSketchStream(stream, 4096)
         .toDF("source", "v_filled", "n_est")
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_card",
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "documents"))
-      val fin = s.table("g_stream_card").groupBy(col("source"))
+      val fin = replayed(out, OutputMode.Update(), dir, "documents")
+        .groupBy(col("source"))
         .agg(max(struct(col("v_filled"), col("n_est"))).as("st"))
         .select(col("source"), col("st.v_filled"), col("st.n_est"))
-      val exact = docs.select(col("source"),
-          explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .distinct().groupBy(col("source")).agg(count(lit(1)).as("n_exact"))
       exact.join(fin, "source")
         .select(col("source"), col("n_exact"), col("v_filled"), col("n_est"))
     }),
@@ -1858,25 +1861,13 @@ object SparkEntry {
     // bit-identical to the batch kernel — oracle: cardinality_hll's,
     // verbatim
     "stream_cardinality_hll" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val stream = graft.sources.Sources
-        .streamTable(s, dir, "documents", docs.schema)
-        .where(col("doc_id").isNotNull && col("text").isNotNull
-          && col("source").isNotNull)
-        .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .as[(String, String)]
+      val (stream, exact) = sourceTokens(s, dir)
       val out = graft.streaming.Streams.hllSketchStream(stream, 8)
         .toDF("source", "seq", "n_est")
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_hll",
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "documents"))
-      val fin = s.table("g_stream_hll").groupBy(col("source"))
+      val fin = replayed(out, OutputMode.Update(), dir, "documents")
+        .groupBy(col("source"))
         .agg(max(struct(col("seq"), col("n_est"))).as("st"))
         .select(col("source"), col("st.n_est").as("n_est_hll"))
-      val exact = docs.select(col("source"),
-          explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .distinct().groupBy(col("source")).agg(count(lit(1)).as("n_exact"))
       exact.join(fin, "source")
         .select(col("source"), col("n_exact"), col("n_est_hll"))
     }),
@@ -1895,10 +1886,7 @@ object SparkEntry {
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok")).as[String]
       val out = graft.streaming.Streams.freqSketchStream(stream, 4, 1024)
         .toDF("i", "counters")
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_cms",
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "documents"))
-      val cms = s.table("g_stream_cms")
+      val cms = replayed(out, OutputMode.Update(), dir, "documents")
         .withColumn("tot", aggregate(col("counters"), lit(0L), _ + _))
         .groupBy(col("i")).agg(max_by(col("counters"), col("tot")).as("counters"))
         .select(col("i"), posexplode(col("counters")).as(Seq("slot", "c")))
@@ -1932,10 +1920,8 @@ object SparkEntry {
       val out = graft.streaming.Streams
         .quantileSketchStream(stream, 65536L, 1024, Seq(0.5, 0.9, 0.99))
         .toDF("q", "rank", "est_upper")
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_quant",
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "orders"))
-      val fin = s.table("g_stream_quant").groupBy(col("q"))
+      val fin = replayed(out, OutputMode.Update(), dir, "orders")
+        .groupBy(col("q"))
         .agg(max(struct(col("rank"), col("est_upper"))).as("st"))
         .select(col("q"), col("st.rank"), col("st.est_upper"))
       val exact = orders.agg(expr(
@@ -1963,10 +1949,7 @@ object SparkEntry {
         timestamp_micros(Temporal.epochUs(stream0, "ts")))
       val out = graft.streaming.Streams.dailyAnomalyStream(
         stream, stats, "event_time", "event_type", 2.0)
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out, "g_stream_anom",
-        org.apache.spark.sql.streaming.OutputMode.Complete(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "events"))
-      s.table("g_stream_anom")
+      replayed(out, OutputMode.Complete(), dir, "events")
     }),
 
     // filter-funnel report: per-gate drop counts + pass count in ONE
@@ -2832,16 +2815,12 @@ object SparkEntry {
     // batch twin's SQL verbatim
     "stream_sessionize" -> ((s, dir) => {
       import s.implicits._
-      val raw = t(s, dir, "events")
-      val st0 = graft.sources.Sources.streamTable(s, dir, "events", raw.schema)
+      val st0 = graft.sources.Sources.streamTable(s, dir, "events", t(s, dir, "events").schema)
       val st = st0.select(col("user_id").as("user"), col("event_id").as("eventId"),
           Temporal.epochUs(st0, "ts").as("ts"), col("value"))
         .as[graft.streaming.Streams.SessIn]
       val out = graft.streaming.Streams.sessionizeStream(st, 1800000000L)
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out.toDF, "g_stream_sess",
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "events"))
-      s.table("g_stream_sess")
+      replayed(out.toDF, OutputMode.Append(), dir, "events")
         .groupBy(col("user"), col("sessionSeq"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("session_value"))
         .select(col("user").as("user_id"), col("sessionSeq").as("session_seq"),
@@ -2853,16 +2832,12 @@ object SparkEntry {
     // dropDuplicates — same per-type survival counts as batch
     "stream_dedup_window" -> ((s, dir) => {
       import s.implicits._
-      val raw = t(s, dir, "events")
-      val st0 = graft.sources.Sources.streamTable(s, dir, "events", raw.schema)
+      val st0 = graft.sources.Sources.streamTable(s, dir, "events", t(s, dir, "events").schema)
       val st = st0.select(col("user_id").as("user"), col("event_type").as("eventType"),
           col("event_id").as("eventId"), Temporal.epochUs(st0, "ts").as("ts"))
         .as[graft.streaming.Streams.WDedupIn]
       val out = graft.streaming.Streams.dedupWindowStream(st, 60000000L)
-      graft.streaming.Streams.runToMemoryAvailableNowSized(out.toDF, "g_stream_wdedup",
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        graft.sources.Sources.sizedShufflePartitions(dir, "events"))
-      s.table("g_stream_wdedup")
+      replayed(out.toDF, OutputMode.Append(), dir, "events")
         .groupBy(col("eventType"))
         .agg(count(lit(1)).as("n_total"),
           sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),

@@ -30,9 +30,9 @@ object Caching {
       Memo.get(df.sparkSession, Memo.Intermediates, df)(df.persist(StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** Unpersist every tracked operator intermediate (lazily — no job,
-    * executor blocks are dropped asynchronously) and drop the refs.
-    * Every other memo family is left alone.
+  /** Unpersist every tracked intermediate and replay checkpoint
+    * (lazily — no job, executor blocks are dropped asynchronously) and
+    * drop the refs. Every other memo family is left alone.
     */
-  def release(): Unit = Memo.evict(Memo.Intermediates)
+  def release(): Unit = { Memo.evict(Memo.Intermediates); Memo.evict(Memo.Replays) }
 }

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.operators.Caching.TrackedDf
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming mirrors of the batch operators.
   *
@@ -18,6 +20,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State design for scale: all aggregations are keyed, watermarks
   * bound state size, and sessionization uses per-key timeouts —
   * nothing accumulates unboundedly on a 1000-executor cluster.
+  *
+  * Output follows the same rule: [[replay]] hands a finished stream's
+  * rows back as executor-side checkpoints, never through the driver.
   */
 object Streams {
 
@@ -230,7 +235,9 @@ object Streams {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (user, rows, state: GroupState[(Long, Long)]) =>
           var (lastTs, seq) = state.getOption.getOrElse((0L, 0L))
-          val out = rows.toSeq.sortBy(r => (r.ts, r.eventId)).map { r =>
+          // stable (ts, eventId) sort on primitive compares, no tuple per row
+          val out = rows.toArray.sortWith((a, b) =>
+            a.ts < b.ts || (a.ts == b.ts && a.eventId < b.eventId)).map { r =>
             // seq == 0 means "no previous event": short-circuits before
             // the subtraction so the sentinel can't fake a gap
             if (seq == 0L || r.ts - lastTs > gapUs) seq += 1
@@ -263,7 +270,8 @@ object Streams {
         case ((user, etype), rows, state: GroupState[Long]) =>
           var lastTs = state.getOption.getOrElse(0L)
           var seen = state.exists
-          val out = rows.toSeq.sortBy(r => (r.ts, r.eventId)).map { r =>
+          val out = rows.toArray.sortWith((a, b) =>
+            a.ts < b.ts || (a.ts == b.ts && a.eventId < b.eventId)).map { r =>
             val keep = !seen || r.ts - lastTs > windowUs
             lastTs = r.ts
             seen = true
@@ -682,7 +690,7 @@ object Streams {
       shingleSize: Int = 3,
       numHashes: Int = 128,
       bands: Int = 32) {
-    import graft.operators.{Caching, Dedup}
+    import graft.operators.Dedup
     private var corpus = corpus0.select(col(idCol), col(textCol)).localCheckpoint()
     @volatile private var labelsDf = labels0.localCheckpoint()
     /** Current (id, cluster) — the persisted daily artifact. */
@@ -703,7 +711,8 @@ object Streams {
       labelsDf = Dedup.clustersIncremental(
         labelsDf, cross.unionByName(within), allIds, idCol).localCheckpoint()
       corpus = corpus.unionByName(b).localCheckpoint()
-      Caching.release()
+      // the miners' persists only: a replay's frames must outlive this
+      graft.Memo.evict(graft.Memo.Intermediates)
     }
   }
 
@@ -728,58 +737,46 @@ object Streams {
     (st, w)
   }
 
-  /** Stream → noop-style sink for tests/benchmarks: process all
-    * available data once and stop (Trigger.AvailableNow semantics via
-    * processAllAvailable on a memory sink).
+  /** Runs `df` once over everything available now
+    * (`Trigger.AvailableNow`, possibly several micro-batches) and
+    * returns its output as a frame of the caller's session whose rows
+    * stay on the executors: each batch is one eager `localCheckpoint()`
+    * in `foreachBatch`, so its job returns a row count to the driver,
+    * where Spark's `memory` sink returned every row. As in that sink,
+    * batches are keyed by id (a re-delivered id replaces its frame);
+    * Append and Update keep every batch, Complete the last. With no
+    * batch the frame is empty, with the stream's schema. The
+    * checkpoints live in [[graft.Memo.Replays]] until
+    * `graft.operators.Caching.release()`.
+    *
+    * Streaming plans get no AQE: a micro-batch runs exactly
+    * `spark.sql.shuffle.partitions` tasks per shuffle and as many
+    * RocksDB state stores. `shufflePartitions`, sized by the caller to
+    * the input ([[graft.sources.Sources.sizedShufflePartitions]]),
+    * replaces the session value while the query runs; keyed state is
+    * partition-count-independent, so results are identical.
     */
-  def runToMemory(df: DataFrame, name: String, outputMode: OutputMode): Unit = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** One-shot batch-over-stream execution with Trigger.AvailableNow:
-    * processes everything available at start time (possibly as several
-    * rate-limited micro-batches) and terminates. This is the mode the
-    * batch↔streaming equivalence harness runs — same parquet in, same
-    * rows out as the batch operator.
-    */
-  def runToMemoryAvailableNow(df: DataFrame, name: String, outputMode: OutputMode): Unit = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[runToMemoryAvailableNow]] with the micro-batch shuffle width
-    * sized to the INPUT instead of the session default. Streaming
-    * plans get no AQE (Spark disables it for stateful workloads), so
-    * unlike every batch query — where the advisory-size coalesce
-    * adapts the 32 session partitions down to the data — a streaming
-    * micro-batch runs exactly `spark.sql.shuffle.partitions` tasks
-    * for every shuffle AND creates that many state-store (RocksDB)
-    * instances, regardless of volume. `shufflePartitions` here is
-    * derived from input bytes ([[graft.sources.Sources.sizedShufflePartitions]]),
-    * so the replay keeps one state instance per ~32 MB of input at
-    * any scale rather than a constant tuned to either extreme. The
-    * session value is restored after termination — keyed streaming
-    * state is partition-count-independent, so results are identical
-    * (the batch-equivalence specs pin this).
-    */
-  def runToMemoryAvailableNowSized(
-      df: DataFrame, name: String, outputMode: OutputMode,
-      shufflePartitions: Int): Unit = {
+  def replay(df: DataFrame, outputMode: OutputMode, shufflePartitions: Int): DataFrame = {
     val spark = df.sparkSession
+    val batches = new java.util.TreeMap[Long, DataFrame]()
+    def drop(b: DataFrame): Unit = GraftBridge.checkpointRdds(b).foreach(_.unpersist(blocking = false))
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    try runToMemoryAvailableNow(df, name, outputMode)
+    try df.writeStream
+      .outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        val cp = b.localCheckpoint()
+        graft.Memo.get(spark, graft.Memo.Replays, cp)(cp)
+        batches.synchronized {
+          if (outputMode == OutputMode.Complete()) batches.values.removeIf { old => drop(old); true }
+          Option(batches.put(id, cp)).foreach(drop)
+        }
+      }
+      .start()
+      .awaitTermination()
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if (batches.isEmpty) spark.createDataFrame(java.util.List.of[Row](), df.schema)
+    else GraftBridge.unionIn(spark, batches.values.asScala.toSeq)
   }
 }

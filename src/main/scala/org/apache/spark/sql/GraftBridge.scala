@@ -23,4 +23,12 @@ object GraftBridge {
     df.queryExecution.analyzed.collect {
       case l: execution.LogicalRDD => l.rdd
     }
+
+  /** `dfs`' union re-homed in session `s`: micro-batch frames belong to a stream's clone. */
+  def unionIn(s: SparkSession, dfs: Seq[Dataset[_]]): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      dfs.map(_.queryExecution.logical) match {
+        case Seq(one) => one
+        case plans => catalyst.plans.logical.Union(plans)
+      })
 }

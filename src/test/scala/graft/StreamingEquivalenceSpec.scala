@@ -21,6 +21,10 @@ class StreamingEquivalenceSpec extends SparkSpec {
   private def rowSet(df: DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
+  /** `df` replayed to completion at the session's shuffle width. */
+  private def replay(df: DataFrame, mode: OutputMode): DataFrame =
+    Streams.replay(df, mode, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
   private lazy val eventsSchema =
     spark.read.parquet(s"$sfDir/events.parquet").schema
 
@@ -49,13 +53,13 @@ class StreamingEquivalenceSpec extends SparkSpec {
       Seq(count(lit(1)).as("n"), round(sum(col("value")), 2).as("v")))
       .select(col("window.start").cast("string").as("ws"),
         col("event_type"), col("n"), col("v"))
-    Streams.runToMemoryAvailableNow(streamed, "eq_windowed", OutputMode.Complete())
+    val replayed = replay(streamed, OutputMode.Complete())
     val batch = eventsBatch
       .groupBy(window(col("event_time"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("v"))
       .select(col("window.start").cast("string").as("ws"),
         col("event_type"), col("n"), col("v"))
-    assert(rowSet(spark.table("eq_windowed")) == rowSet(batch),
+    assert(rowSet(replayed) == rowSet(batch),
       "streaming windowed aggregate diverged from batch")
   }
 
@@ -65,8 +69,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
     val out = Streams.dedupWithinWatermark(
       eventsStream, "event_time", "3650 days", Seq("user_id"))
       .select(col("user_id"))
-    Streams.runToMemoryAvailableNow(out, "eq_dedup", OutputMode.Append())
-    val streamKeys = spark.table("eq_dedup").collect().map(_.getLong(0)).toSet
+    val replayed = replay(out, OutputMode.Append())
+    val streamKeys = replayed.collect().map(_.getLong(0)).toSet
     val batchKeys = eventsBatch.select("user_id").distinct()
       .collect().map(_.getLong(0)).toSet
     assert(streamKeys == batchKeys, "streaming dedup keys diverged from batch distinct")
@@ -81,13 +85,13 @@ class StreamingEquivalenceSpec extends SparkSpec {
       Seq(count(lit(1)).as("n"), sum(cents).as("v_cents")))
       .select(col("session_window.start").cast("string").as("ss"),
         col("user_id"), col("n"), col("v_cents"))
-    Streams.runToMemoryAvailableNow(streamed, "eq_session", OutputMode.Complete())
+    val replayed = replay(streamed, OutputMode.Complete())
     val batch = eventsBatch
       .groupBy(session_window(col("event_time"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"), sum(cents).as("v_cents"))
       .select(col("session_window.start").cast("string").as("ss"),
         col("user_id"), col("n"), col("v_cents"))
-    assert(rowSet(spark.table("eq_session")) == rowSet(batch),
+    assert(rowSet(replayed) == rowSet(batch),
       "streaming session windows diverged from batch")
   }
 
@@ -102,7 +106,7 @@ class StreamingEquivalenceSpec extends SparkSpec {
       shaped(eventsStream, "p", "purchase"),
       "c_ts", "p_ts", "3650 days", "user_id", "10 minutes")
       .select(col("c_id"), col("p_id"))
-    Streams.runToMemoryAvailableNow(joined, "eq_ssjoin", OutputMode.Append())
+    val replayed = replay(joined, OutputMode.Append())
     val cb = shaped(eventsBatch, "c", "click")
     val pb = shaped(eventsBatch, "p", "purchase")
     val batch = cb.join(pb,
@@ -110,7 +114,7 @@ class StreamingEquivalenceSpec extends SparkSpec {
         pb("p_ts") >= cb("c_ts") &&
         pb("p_ts") <= cb("c_ts") + expr("INTERVAL 10 minutes"))
       .select(col("c_id"), col("p_id"))
-    assert(rowSet(spark.table("eq_ssjoin")) == rowSet(batch),
+    assert(rowSet(replayed) == rowSet(batch),
       "stream-stream join diverged from the batch range join")
   }
 
@@ -325,9 +329,9 @@ class StreamingEquivalenceSpec extends SparkSpec {
       .filter(col("event_type") === "purchase")
       .map(col("event_id"), col("user_id"), round(col("value") * 2, 2).as("v2"))
     val streamed = t.run(eventsStream.drop("event_time"), PipelineContext(spark))
-    Streams.runToMemoryAvailableNow(streamed, "eq_transform", OutputMode.Append())
+    val replayed = replay(streamed, OutputMode.Append())
     val batch = t.run(spark.read.parquet(s"$sfDir/events.parquet"), PipelineContext(spark))
-    assert(rowSet(spark.table("eq_transform")) == rowSet(batch),
+    assert(rowSet(replayed) == rowSet(batch),
       "streaming transformer output diverged from batch")
   }
 
@@ -337,9 +341,9 @@ class StreamingEquivalenceSpec extends SparkSpec {
     val in = MemoryStream[(String, Double)]
     in.addData(data: _*)
     val out = Streams.runningTotals(in.toDS())
-    Streams.runToMemory(out.toDF(), "eq_running", OutputMode.Update())
+    val replayed = replay(out.toDF(), OutputMode.Update())
     // the last update per key carries the final running totals
-    val finals = spark.table("eq_running").collect()
+    val finals = replayed.collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getDouble(2))))
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
     val batch = data.toDF("k", "v").groupBy("k")
@@ -402,8 +406,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
     val stats = Temporal.dailyStats(Temporal.dailyCounts(raw, "ts", "event_type"))
     val streamed = Streams.dailyAnomalyStream(
       eventsStream, stats, "event_time", "event_type", 1.0)
-    Streams.runToMemoryAvailableNow(streamed, "eq_anomaly", OutputMode.Complete())
-    assert(rowSet(spark.table("eq_anomaly")) == rowSet(batch),
+    val replayed = replay(streamed, OutputMode.Complete())
+    assert(rowSet(replayed) == rowSet(batch),
       "streaming anomaly gate diverged from batch")
   }
 
@@ -417,9 +421,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
       .as[(String, String)]
     val out = Streams.distinctSketchStream(stream, 4096)
       .toDF("source", "v_filled", "n_est")
-    Streams.runToMemoryAvailableNow(out, "eq_sketch", OutputMode.Update())
     // the bitmap only fills, so each group's final state is its max-v row
-    val streamed = spark.table("eq_sketch")
+    val streamed = replay(out, OutputMode.Update())
       .groupBy(col("source"))
       .agg(max(struct(col("v_filled"), col("n_est"))).as("s"))
       .select(col("source"), col("s.v_filled"), col("s.n_est"))
@@ -439,9 +442,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
         explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
       .as[(String, String)]
     val out = Streams.hllSketchStream(stream, 8).toDF("source", "seq", "n_est")
-    Streams.runToMemoryAvailableNow(out, "eq_hll", OutputMode.Update())
     // registers only grow; the max-seq row per group is the full-corpus state
-    val streamed = spark.table("eq_hll")
+    val streamed = replay(out, OutputMode.Update())
       .groupBy(col("source"))
       .agg(max(struct(col("seq"), col("n_est"))).as("s"))
       .select(col("source"), col("s.n_est"))
@@ -463,11 +465,11 @@ class StreamingEquivalenceSpec extends SparkSpec {
         && col("vec_id") % 10 === 0)
     val out = Streams.incrementalCosineNearDupStream(
       stream, corpus, "vec_id", "embedding", 0.3, nBits)
-    Streams.runToMemoryAvailableNow(out, "eq_coslinks", OutputMode.Append())
+    val replayed = replay(out, OutputMode.Append())
     val batch = graft.operators.Similarity.nearDupCosineBandedIncremental(
       emb.where(col("vec_id") % 10 === 0), corpus, "vec_id", "embedding", 0.3,
       Memo.rows(corpus))
-    assert(rowSet(spark.table("eq_coslinks")) == rowSet(batch),
+    assert(rowSet(replayed) == rowSet(batch),
       "streaming cosine links diverged from batch incremental")
   }
 
@@ -480,9 +482,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
       .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
       .as[String]
     val out = Streams.freqSketchStream(stream, d, w).toDF("i", "counters")
-    Streams.runToMemoryAvailableNow(out, "eq_cms", OutputMode.Update())
     // counters only grow; the final state per row i is its max-sum emission
-    val streamed = spark.table("eq_cms")
+    val streamed = replay(out, OutputMode.Update())
       .withColumn("tot", aggregate(col("counters"), lit(0L), _ + _))
       .groupBy(col("i"))
       .agg(max_by(col("counters"), col("tot")).as("counters"))
@@ -512,9 +513,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
       .as[Double]
     val out = Streams.quantileSketchStream(stream, 65536L, 1024, qs)
       .toDF("q", "rank", "est_upper")
-    Streams.runToMemoryAvailableNow(out, "eq_qsketch", OutputMode.Update())
     // ranks only grow with n; the final emission per q carries max rank
-    val streamed = spark.table("eq_qsketch")
+    val streamed = replay(out, OutputMode.Update())
       .groupBy(col("q"))
       .agg(max(struct(col("rank"), col("est_upper"))).as("s"))
       .select(col("q"), col("s.rank"), col("s.est_upper"))

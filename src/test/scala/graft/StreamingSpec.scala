@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -10,6 +11,10 @@ import graft.streaming.Streams
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `df` replayed to completion at the session's shuffle width. */
+  private def replay(df: DataFrame, mode: OutputMode): DataFrame =
+    Streams.replay(df, mode, spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
@@ -23,8 +28,8 @@ class StreamingSpec extends SparkSpec {
       .map((col("value") * 10).as("value"))
     val out = t.run(in.toDF(), PipelineContext(spark))
     assert(out.isStreaming)
-    Streams.runToMemory(out, "t_stream", OutputMode.Append())
-    val rows = spark.table("t_stream").collect().map(_.getInt(0)).sorted
+    val replayed = replay(out, OutputMode.Append())
+    val rows = replayed.collect().map(_.getInt(0)).sorted
     assert(rows.toSeq == Seq(20, 40, 60))
   }
 
@@ -35,8 +40,8 @@ class StreamingSpec extends SparkSpec {
     val df = in.toDF().toDF("ts", "k", "v")
     val agg = Streams.windowedAgg(df, "ts", "1 minute", "10 minutes",
       Seq(col("k")), Seq(sum(col("v")).as("s"), count(lit(1)).as("n")))
-    Streams.runToMemory(agg, "w_stream", OutputMode.Complete())
-    val rows = spark.table("w_stream")
+    val replayed = replay(agg, OutputMode.Complete())
+    val rows = replayed
       .select(col("k"), col("s"), col("n")).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
     // window [10:00,10:10): a -> 3.0 over 2 events; [10:10,10:20): b 5.0, a 4.0
@@ -51,8 +56,8 @@ class StreamingSpec extends SparkSpec {
     val df = in.toDF().toDF("ts", "user", "v")
     val sess = Streams.sessionWindowAgg(df, "ts", "1 minute", "10 minutes",
       Seq(col("user")), Seq(count(lit(1)).as("n_events")))
-    Streams.runToMemory(sess, "s_stream", OutputMode.Complete())
-    val rows = spark.table("s_stream").select("n_events").collect().map(_.getLong(0)).sorted
+    val replayed = replay(sess, OutputMode.Complete())
+    val rows = replayed.select("n_events").collect().map(_.getLong(0)).sorted
     assert(rows.toSeq == Seq(1L, 2L))
   }
 
@@ -61,8 +66,8 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(String, Double)]
     in.addData(("a", 1.0), ("a", 2.0), ("b", 10.0))
     val out = Streams.runningTotals(in.toDS())
-    Streams.runToMemory(out.toDF(), "g_stream", OutputMode.Update())
-    val rows = spark.table("g_stream").collect()
+    val replayed = replay(out.toDF(), OutputMode.Update())
+    val rows = replayed.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rows == Set(("a", 2L, 3.0), ("b", 1L, 10.0)))
   }
@@ -73,8 +78,8 @@ class StreamingSpec extends SparkSpec {
     in.addData((ts(1), 1L, "a"), (ts(2), 1L, "dup"), (ts(3), 2L, "b"), (ts(4), 1L, "dup2"))
     val df = in.toDF().toDF("ts", "key", "payload")
     val out = Streams.dedupWithinWatermark(df, "ts", "10 minutes", Seq("key"))
-    Streams.runToMemory(out, "dd_stream", OutputMode.Append())
-    val keys = spark.table("dd_stream").select("key").collect().map(_.getLong(0)).sorted
+    val replayed = replay(out, OutputMode.Append())
+    val keys = replayed.select("key").collect().map(_.getLong(0)).sorted
     assert(keys.toSeq == Seq(1L, 2L))
   }
 
@@ -87,8 +92,8 @@ class StreamingSpec extends SparkSpec {
     val c = clicks.toDF().toDF("cts", "user")
     val b = buys.toDF().toDF("bts", "user")
     val joined = Streams.streamStreamJoin(c, b, "cts", "bts", "1 minute", "user", "30 minutes")
-    Streams.runToMemory(joined.select(c("user")), "ss_join", OutputMode.Append())
-    val users = spark.table("ss_join").collect().map(_.getLong(0)).sorted
+    val replayed = replay(joined.select(c("user")), OutputMode.Append())
+    val users = replayed.collect().map(_.getLong(0)).sorted
     assert(users.toSeq == Seq(1L)) // only the within-window purchase joins
   }
 
@@ -107,8 +112,8 @@ class StreamingSpec extends SparkSpec {
       Seq(org.apache.spark.sql.functions.col("event_type")),
       Seq(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n")))
-    Streams.runToMemory(agg, "file_stream", OutputMode.Complete())
-    val total = spark.table("file_stream")
+    val replayed = replay(agg, OutputMode.Complete())
+    val total = replayed
       .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
     assert(total == 1000L) // every event of sf0.001 flowed through the stream
   }
