@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sources
+
 /** Scale-up data generator for the scaling sweep (VERDICT r6 item 1).
   *
   * Produces an sf-N× replica of a driver-generated sf directory by
@@ -41,7 +43,7 @@ object DataGen {
     val copies = copiesStr.toInt
     val spark = GraftSession.local(GraftSession.cpus)
 
-    def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
+    def src(t: String): DataFrame = Sources.open(spark, "parquet", Map.empty, s"$srcDir/$t.parquet")
 
     // one row per copy index; the crossJoin is broadcast and bounded
     val cps = spark.range(copies.toLong).select(col("id").cast("int").as("cp"))

@@ -8,6 +8,7 @@ import graft.operators.Similarity.BisectTree
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** The work graft reuses across the queries of one session, in one
   * place. Every entry is keyed by (session, family, key), and the
@@ -16,6 +17,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *  - [[Tables]]: parquet reads per path. Repeated queries in one run
   *    skip re-listing files and re-reading footers, the per-query
   *    fixed cost that dominates a benchmark sweep.
+  *  - [[Schemas]]: the schema per file-source open (format, reader
+  *    options, path), with the [[listingHash]] it was inferred over
+  *    (`Sources.open`). A repeat open reads with that schema and runs
+  *    no inference job (a footer merge for parquet, a full scan for
+  *    JSON and CSV); an open whose listing has changed infers again.
   *  - [[ProbeWidths]]: knn_join_ivf's calibrated probe width per data
   *    dir: calibrate once, deploy many.
   *  - [[BpeMerges]]: the learned BPE merge table per (dir, word-source
@@ -83,6 +89,7 @@ object Memo {
   }
 
   case object Tables extends Family[DataFrame]
+  case object Schemas extends Family[(Int, StructType)]
   case object ProbeWidths extends Family[Int]
   case object BpeMerges extends Family[Seq[Row]]
   case object Trees extends Family[BisectTree](cap = 4) {
@@ -99,24 +106,30 @@ object Memo {
   }
 
   private val families: Seq[Family[_]] =
-    Seq(Tables, ProbeWidths, BpeMerges, Trees, Intermediates, Rows, Replays)
+    Seq(Tables, Schemas, ProbeWidths, BpeMerges, Trees, Intermediates, Rows, Replays)
 
-  /** `df`'s memo key: its canonicalized analyzed plan, the plan's
-    * semantic hash (the string elides wide field lists) and a hash of
-    * every listed file's path, length and modification time. File
-    * indexes compare equal by root path alone, so without the listing
-    * a fresh read of a rewritten path would hit the old read's entry.
+  /** A hash of every file `df` reads: path, length and modification
+    * time. File indexes compare equal by root path alone, so a key
+    * without the listing would match a rewritten path's old entry.
+    * The index lists its files when the read is built, so this runs
+    * no job.
     */
-  private[graft] def planKey(df: DataFrame): String = {
-    val plan = df.queryExecution.analyzed
-    val files = plan.collect {
+  private[graft] def listingHash(df: DataFrame): Int =
+    MurmurHash3.unorderedHash(df.queryExecution.analyzed.collect {
       case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
     }.flatMap {
       case idx: PartitioningAwareFileIndex =>
         idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
       case idx => idx.inputFiles.toSeq
-    }
-    s"${plan.semanticHash()}:${plan.canonicalized}:${MurmurHash3.unorderedHash(files)}"
+    })
+
+  /** `df`'s memo key: its canonicalized analyzed plan, the plan's
+    * semantic hash (the string elides wide field lists) and its
+    * [[listingHash]].
+    */
+  private[graft] def planKey(df: DataFrame): String = {
+    val plan = df.queryExecution.analyzed
+    s"${plan.semanticHash()}:${plan.canonicalized}:${listingHash(df)}"
   }
 
   /** `df`'s row count, counted once per (session, [[planKey]]). */
@@ -147,15 +160,21 @@ object Memo {
         task.run()
         synchronized {
           inFlight.remove((f, s, key))
-          scala.util.Try(task.get()).foreach { v =>
-            f.entries.put(k, v.asInstanceOf[V])
-            if (f.entries.size > f.cap) f.entries.remove(f.entries.keySet.iterator.next())
-          }
+          scala.util.Try(task.get()).foreach(v => store(f, k, v.asInstanceOf[V]))
         }
       }
       try task.get().asInstanceOf[V]
       catch { case e: ExecutionException => throw e.getCause }
     }
+  }
+
+  /** Replace `key`'s entry with `v`, releasing the entry it held. */
+  def put[V](s: SparkSession, f: Family[V], key: Any, v: V): Unit = synchronized(store(f, (s, key), v))
+
+  private def store[V](f: Family[V], k: (SparkSession, Any), v: V): Unit = {
+    val old = f.entries.put(k, v)
+    if (old != null) f.release(old)
+    if (f.entries.size > f.cap) f.entries.remove(f.entries.keySet.iterator.next())
   }
 
   /** Drop family `f` in every session, running its release hook. */

@@ -90,7 +90,7 @@ object SparkEntry {
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Memo.get(s, Memo.Tables, s"$dir/$name.parquet") {
-      val raw = s.read.parquet(s"$dir/$name.parquet")
+      val raw = Sources.open(s, "parquet", Map.empty, s"$dir/$name.parquet")
       // drift insurance (the round-7 events-encoding lesson): the
       // vector kernels are typed array<float>, so a driver-side
       // regeneration of embeddings as array<double> would break every
@@ -997,7 +997,7 @@ object SparkEntry {
       // array<double> — t()'s normalized schema could mismatch the
       // physical type); assignIncrementalStream casts to double itself
       val st0 = graft.sources.Sources.streamTable(s, dir, "embeddings",
-        s.read.parquet(s"$dir/embeddings.parquet").schema)
+        Sources.open(s, "parquet", Map.empty, s"$dir/embeddings.parquet").schema)
       val out = Similarity.assignIncrementalStream(
         st0.where(col("vec_id") % 2 === 0), corpus, "vec_id", "embedding",
         nCells, iters = 1, targetRows = 64)

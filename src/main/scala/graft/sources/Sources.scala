@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-import graft.Pipeline
+import graft.{Memo, Pipeline}
 
 /** Source bindings — laygo pipelines start from Python iterables
   * (pipeline.py:94); graft pipelines start from distributed sources.
@@ -12,18 +13,44 @@ import graft.Pipeline
   */
 object Sources {
 
+  /** `path` read as `format` with reader `options`, its schema inferred
+    * once per (session, format, options, path, listing) in
+    * `Memo.Schemas`. A repeat open reads with the memoized schema: it
+    * still lists the files, so appended or removed files are read, but
+    * runs no inference job (a footer merge for parquet, a full scan for
+    * JSON and CSV). When the listing's [[graft.Memo.listingHash]]
+    * differs from the one the schema was inferred over, the open
+    * infers again and replaces the entry.
+    */
+  def open(spark: SparkSession, format: String, options: Map[String, String],
+      path: String): DataFrame = {
+    // DataFrameReader is a mutable builder: `.schema` must not reach `infer`
+    def reader = spark.read.format(format).options(options)
+    val key = (format, options, path)
+    var inferred: DataFrame = null
+    def infer(): (Int, StructType) = {
+      inferred = reader.load(path)
+      (Memo.listingHash(inferred), inferred.schema)
+    }
+    val (listing, schema) = Memo.get(spark, Memo.Schemas, key)(infer())
+    if (inferred != null) inferred
+    else {
+      val df = reader.schema(schema).load(path)
+      if (Memo.listingHash(df) == listing) df
+      else { Memo.put(spark, Memo.Schemas, key, infer()); inferred }
+    }
+  }
+
   def parquet(spark: SparkSession, path: String): Pipeline =
-    Pipeline(spark.read.parquet(path))
+    Pipeline(open(spark, "parquet", Map.empty, path))
 
   def csv(spark: SparkSession, path: String, header: Boolean = true,
       inferSchema: Boolean = true): Pipeline =
-    Pipeline(spark.read
-      .option("header", header.toString)
-      .option("inferSchema", inferSchema.toString)
-      .csv(path))
+    Pipeline(open(spark, "csv",
+      Map("header" -> header.toString, "inferSchema" -> inferSchema.toString), path))
 
   def json(spark: SparkSession, path: String): Pipeline =
-    Pipeline(spark.read.json(path))
+    Pipeline(open(spark, "json", Map.empty, path))
 
   /** Local collection → distributed dataset (laygo `Pipeline(data)`). */
   def values[T: Encoder](spark: SparkSession, data: Seq[T]): Pipeline =
@@ -40,7 +67,7 @@ object Sources {
     * graft.streaming.Streams transforms.
     */
   def streamParquet(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     spark.readStream.schema(schema).parquet(path)
 
   /** Stream ONE table of a testdata sf directory. The file-stream
@@ -52,7 +79,7 @@ object Sources {
     * other table's — the filter prunes at listing time, before I/O).
     */
   def streamTable(spark: SparkSession, dir: String, name: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      schema: StructType): DataFrame = {
     val p = new java.io.File(s"$dir/$name.parquet")
     if (p.isDirectory) spark.readStream.schema(schema).parquet(p.toString)
     else spark.readStream.schema(schema)

@@ -516,18 +516,6 @@ object Streams {
       }
   }
 
-  /** Streaming Count-Min frequency sketch — bounded-state streaming
-    * heavy-hitter counts: the only state is d rows × w counters
-    * (d·w·8 bytes total; 32 KB at 4×1024), never a per-token count
-    * table, so state is constant on an unbounded stream. Group = sketch
-    * row i (d groups); each token routes to slot ((aᵢ·h + bᵢ) mod P)
-    * mod w with the SAME FNV-1a token hash and SplitMix64 permutation
-    * constants as the batch [[graft.operators.TextAnalysis
-    * .freqSketchEval]] (equivalence-tested — counter arrays must be
-    * bit-identical because both sides are order-independent integer
-    * sums). Emits each updated (i, counters) row after every batch;
-    * estimate(tok) = min over i of counters(i)(slotᵢ(tok)).
-    */
   /** Streaming mirror of `Corpus.hllSketch`: per-group HLL registers
     * as mapGroupsWithState state — m BYTES per group at any vocabulary
     * size (contrast [[distinctSketchStream]]'s linear-counting bitmap,
@@ -593,6 +581,18 @@ object Streams {
       }
   }
 
+  /** Streaming Count-Min frequency sketch — bounded-state streaming
+    * heavy-hitter counts: the only state is d rows × w counters
+    * (d·w·8 bytes total; 32 KB at 4×1024), never a per-token count
+    * table, so state is constant on an unbounded stream. Group = sketch
+    * row i (d groups); each token routes to slot ((aᵢ·h + bᵢ) mod P)
+    * mod w with the SAME FNV-1a token hash and SplitMix64 permutation
+    * constants as the batch [[graft.operators.TextAnalysis
+    * .freqSketchEval]] (equivalence-tested — counter arrays must be
+    * bit-identical because both sides are order-independent integer
+    * sums). Emits each updated (i, counters) row after every batch;
+    * estimate(tok) = min over i of counters(i)(slotᵢ(tok)).
+    */
   def freqSketchStream(
       toks: Dataset[String],
       d: Int,

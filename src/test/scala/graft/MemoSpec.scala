@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.Caching.TrackedDf
 import graft.operators.{Caching, Similarity}
+import graft.sources.Sources
 
 class MemoSpec extends SparkSpec {
   import spark.implicits._
@@ -159,6 +160,63 @@ class MemoSpec extends SparkSpec {
     val rows = Memo.size(Memo.Rows)
     val (counted, jobs) = jobsIn(Memo.rows(slice(other, 13)))
     assert(counted == n && jobs > 0 && Memo.size(Memo.Rows) == rows + 1)
+  }
+
+  private def tempPath(prefix: String) = Files.createTempDirectory(prefix).resolve("t").toString
+
+  test("a second parquet, json or csv open of one path infers no schema") {
+    val pq = tempPath("open_parquet")
+    val js = tempPath("open_json")
+    val cs = tempPath("open_csv")
+    val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
+    df.write.parquet(pq)
+    df.write.json(js)
+    df.write.option("header", "true").csv(cs)
+    val opens = Seq[(String, () => graft.Pipeline)](
+      "parquet" -> (() => Sources.parquet(spark, pq)),
+      "json" -> (() => Sources.json(spark, js)),
+      "csv" -> (() => Sources.csv(spark, cs)))
+    opens.foreach { case (format, open) =>
+      val (first, cold) = jobsIn(open().toDF)
+      assert(cold > 0, s"$format: the first open must infer its schema")
+      val (again, warm) = jobsIn(open().toDF)
+      assert(warm == 0, s"$format: a repeat open ran $warm job(s)")
+      assert(again.schema == first.schema)
+      assert(again.collect().toSet == first.collect().toSet)
+    }
+  }
+
+  test("a path rewritten with an extra column is inferred again") {
+    val dir = tempPath("open_rewrite")
+    spark.range(3).write.parquet(dir)
+    Sources.parquet(spark, dir)
+    assert(jobsIn(Sources.parquet(spark, dir).toDF.columns.toSeq) == ((Seq("id"), 0)))
+    spark.range(3).withColumn("extra", col("id") * 10).write.mode("overwrite").parquet(dir)
+    val rewritten = Sources.parquet(spark, dir).toDF
+    assert(rewritten.columns.toSeq == Seq("id", "extra"))
+    assert(rewritten.select(sum("extra")).head().getLong(0) == 30L)
+    assert(jobsIn(Sources.parquet(spark, dir).toDF.columns.toSeq) == ((Seq("id", "extra"), 0)))
+  }
+
+  test("a file appended to the path is read on the next open") {
+    val dir = tempPath("open_append")
+    spark.range(3).write.parquet(dir)
+    assert(Sources.parquet(spark, dir).toDF.count() == 3)
+    assert(jobsIn(Sources.parquet(spark, dir).toDF.schema)._2 == 0)
+    spark.range(3, 5).write.mode("append").parquet(dir)
+    assert(Sources.parquet(spark, dir).toDF.count() == 5)
+    assert(jobsIn(Sources.parquet(spark, dir).toDF.schema)._2 == 0)
+  }
+
+  test("spark.newSession() infers a source's schema on its own") {
+    val dir = tempPath("open_session")
+    spark.range(3).write.parquet(dir)
+    Sources.parquet(spark, dir)
+    assert(jobsIn(Sources.parquet(spark, dir))._2 == 0)
+    val other = spark.newSession()
+    val (theirs, cold) = jobsIn(Sources.parquet(other, dir).toDF)
+    assert(cold > 0 && (theirs.sparkSession eq other), "a new session must infer on its own")
+    assert(jobsIn(Sources.parquet(other, dir))._2 == 0)
   }
 
   test("only Memo keys state on a SparkSession or asks whether a context is stopped") {
